@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
 import graft.sink.AmplitudeSink
@@ -22,6 +23,17 @@ import graft.streaming.StreamingPipeline
   *     JVM shutdown hook calling `query.stop()`; the current micro-batch
   *     finishes (and acks) before the process exits, matching the
   *     reference's finish-current-iteration semantics.
+  *
+  * State partitions: the insert_id dedup state is split into
+  * `spark.sql.shuffle.partitions` partitions, and Spark fixes that count in
+  * a checkpoint's offset log at its first start; every restart resumes with
+  * the recorded count. [[start]] sizes a NEW checkpoint to the task slots
+  * (`defaultParallelism`) unless the session sets the conf explicitly:
+  * Spark's default of 200 partitions costs a task, a state-store commit and
+  * a POST body per partition per micro-batch, whatever the state's size.
+  * On a cluster, set `spark.sql.shuffle.partitions` (or
+  * `spark.default.parallelism`) before the first start: executors may not
+  * have registered yet when `defaultParallelism` is read.
   */
 object Main {
 
@@ -89,7 +101,11 @@ object Main {
 
   /** Compose config → source → transform → sink and start the stream.
     * `poster`/`trigger` are injectable for tests (recording transport,
-    * `Trigger.AvailableNow`). */
+    * `Trigger.AvailableNow`). Without an explicit
+    * `spark.sql.shuffle.partitions` the state partition count is the task
+    * slots; the conf is set only while `start()` clones the session into
+    * the query and the caller's conf is restored after. A resumed
+    * checkpoint keeps the count it was created with. */
   def start(spark: SparkSession, cfg: GraftConfig,
       poster: AmplitudeSink.Poster = AmplitudeSink.HttpPoster,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
@@ -97,14 +113,20 @@ object Main {
     val raw = StreamingPipeline.readEnvelopes(spark, cfg.sourceDir,
       maxFilesPerTrigger = Some(cfg.maxEventsPerBatch))
     val flat = StreamingPipeline.transform(raw, cfg.hmacKey)
-    StreamingPipeline.writer(flat,
+    val writer = StreamingPipeline.writer(flat,
       AmplitudeSink.Config(
         apiKey = cfg.amplitudeApiKey,
         maxPerRequest = cfg.maxEventsPerBatch,
         maxRetries = cfg.maxRetries,
         timeoutMs = cfg.httpTimeoutMs,
         poster = poster),
-      cfg.checkpointDir, trigger).start()
+      cfg.checkpointDir, trigger)
+    val key = SQLConf.SHUFFLE_PARTITIONS.key
+    if (GraftBridge.confContains(spark, key)) writer.start()
+    else {
+      spark.conf.set(key, spark.sparkContext.defaultParallelism.toLong)
+      try writer.start() finally spark.conf.unset(key)
+    }
   }
 
   /** The reference's `events.processed` info log per batch

@@ -4,7 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's sink path re-expressed for executors: POST batches of
@@ -24,13 +24,16 @@ import org.apache.spark.sql.functions._
   *   - identify-before-event intra-pair order: [[graft.etl.EventEtl.flatten]]
   *     emits both records of a message adjacently in one partition (posexplode
   *     preserves iterator order), and this sink never reorders within a
-  *     partition — so the pair order survives into the POST body
+  *     partition nor cuts a POST body between an `$identify` record and
+  *     the event after it — so the pair arrives together, in order
   *     (SURVEY.md §2.3.3/§7.4.3).
   *
   * Scale notes: one shared `HttpClient` per executor JVM (the DNS/connection
   * cache analog of the reference's `lookup-dns-cache`, `utils.js:13-14`);
-  * events are grouped into ≤ `maxPerRequest` POSTs inside each partition
-  * iterator — no driver collect, no shuffle.
+  * each partition iterator is cut into POST bodies of at most
+  * `maxPerRequest` events, counting both records of a pair, at message
+  * boundaries only (a lone pair goes out whole when `maxPerRequest` = 1)
+  * — no driver collect, no shuffle.
   */
 object AmplitudeSink {
 
@@ -84,7 +87,7 @@ object AmplitudeSink {
 
   /** The reference relies on JSON.stringify for the whole body; here the
     * events are pre-serialized rows, so only the api key needs escaping. */
-  private def postWithRetry(cfg: Config, events: Seq[String]): Unit = {
+  private def postWithRetry(cfg: Config, events: collection.Seq[String]): Unit = {
     val body = events.mkString(
       s"""{"api_key":"${jsonEscape(cfg.apiKey)}","events":[""", ",", "]}")
     var attempt = 0
@@ -112,7 +115,9 @@ object AmplitudeSink {
   /** Serialize the flattened event columns to Amplitude HTTP-V2 JSON.
     * `ignoreNulls` drops absent fields the way JSON.stringify drops
     * `undefined` (`utils.js:112`-adjacent). */
-  def toAmplitudeJson(flat: DataFrame): DataFrame = {
+  def toAmplitudeJson(flat: DataFrame): DataFrame = flat.select(eventJson(flat))
+
+  private def eventJson(flat: DataFrame): Column = {
     // props are JSON *text* in the flat schema — re-parse to variant so
     // to_json embeds them as objects, not double-encoded strings (the
     // reference sends parsed objects, utils.js:97-100).
@@ -124,17 +129,28 @@ object AmplitudeSink {
           try_parse_json(col(p)).as(p)
         case c => col(c).as(c)
       }
-    flat.select(to_json(struct(cols: _*),
-      Map("ignoreNullFields" -> "true")).as("event_json"))
+    to_json(struct(cols: _*), Map("ignoreNullFields" -> "true")).as("event_json")
   }
 
-  /** Batch-mode sink action: POST every partition's rows in
-    * ≤ maxPerRequest groups. Also the `foreachBatch` body for streaming. */
+  /** Batch-mode sink action over [[graft.etl.EventEtl.flatten]]'s rows:
+    * POST every partition's rows in bodies of ≤ maxPerRequest events, cut
+    * only between messages: an `$identify` record (`is_identify`) and the
+    * event after it share a body. Also the `foreachBatch` body for
+    * streaming. */
   def send(flat: DataFrame, cfg: Config): Unit = {
-    val events = toAmplitudeJson(flat)
+    val events = flat.select(eventJson(flat), col("is_identify"))
     events.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      it.map(_.getString(0)).grouped(cfg.maxPerRequest)
-        .foreach(batch => postWithRetry(cfg, batch))
+      val body = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (it.hasNext) {
+        val r = it.next()
+        val pair = r.getBoolean(1) && it.hasNext
+        if (body.nonEmpty && body.size + (if (pair) 2 else 1) > cfg.maxPerRequest) {
+          postWithRetry(cfg, body); body.clear()
+        }
+        body += r.getString(0)
+        if (pair) body += it.next().getString(0)
+      }
+      if (body.nonEmpty) postWithRetry(cfg, body)
     }
   }
 }

@@ -45,7 +45,14 @@ object StreamingPipeline {
     * engine form of the reference's per-record error logs
     * (`amplitude.validation.error`, `utils.js:66`; silent O6 drops):
     * input/invalid/repaired counts surface per micro-batch through
-    * `StreamingQueryProgress.observedMetrics("parse")`. */
+    * `StreamingQueryProgress.observedMetrics("parse")`. Invalid messages
+    * are dropped after those counters and before the dedup: they emit
+    * nothing after [[EventEtl.flatten]], and their shared null insert_id
+    * would pile them onto one state partition.
+    *
+    * The dedup state has `spark.sql.shuffle.partitions` partitions, fixed
+    * at the checkpoint's first start ([[graft.Main.start]] sizes it to the
+    * task slots). */
   def transform(raw: DataFrame, hmacKey: String,
       watermarkDelay: String = "1 hour", dedup: Boolean = true): DataFrame = {
     val parsed = EventEtl.parsed(raw, hmacKey)
@@ -54,6 +61,7 @@ object StreamingPipeline {
         sum(when(!col("valid"), 1L).otherwise(0L)).as("invalid_count"),
         sum(when(col("valid") && col("session_repaired"), 1L).otherwise(0L))
           .as("repaired_count"))
+      .filter(col("valid"))
       .withColumn("publish_ts",
         coalesce(to_timestamp(col("publish_time")), current_timestamp()))
     val deduped =

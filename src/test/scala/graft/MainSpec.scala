@@ -3,7 +3,9 @@ package graft
 import java.nio.file.Files
 import java.util.Base64
 
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** O15 end-to-end: the daemon composition (config → source → transform →
   * sink → ack) driven against the recording transport, including the
@@ -77,5 +79,76 @@ class MainSpec extends SparkTestBase {
     val sent2 = RecordingPoster.bodies.mkString("\n")
     assert(sent2.contains("\"device_id\":\"d-u3\""))
     assert(!sent2.contains("\"device_id\":\"d-u1\""))
+  }
+
+  private val partitionsKey = SQLConf.SHUFFLE_PARTITIONS.key
+
+  /** A session over the shared context with no explicit shuffle-partition
+    * setting, as `Main.main` builds it. */
+  private def unsetSession(): SparkSession = {
+    val s = spark.newSession()
+    s.conf.unset(partitionsKey)
+    assert(!GraftBridge.confContains(s, partitionsKey))
+    s
+  }
+
+  /** A fresh source holding one file (user u1) and a fresh checkpoint. */
+  private def daemonDirs(tag: String): (java.io.File, GraftConfig) = {
+    val src = Files.createTempDirectory(s"graft-$tag-src").toFile
+    val ckpt = Files.createTempDirectory(s"graft-$tag-ckpt").toFile
+    Files.writeString(new java.io.File(src, "a.txt").toPath, envelope("u1", 1000) + "\n")
+    (src, GraftConfig(
+      amplitudeApiKey = "key-p", hmacKey = "graft-test-key",
+      maxEventsPerBatch = 10, sourceDir = src.getAbsolutePath,
+      checkpointDir = ckpt.getAbsolutePath))
+  }
+
+  /** Runs an AvailableNow query to its own end, so that every batch's
+    * progress has been reported. */
+  private def drain(s: SparkSession, cfg: GraftConfig): StreamingQuery = {
+    RecordingPoster.reset()
+    val q = Main.start(s, cfg, poster = RecordingPoster, trigger = Trigger.AvailableNow())
+    q.awaitTermination()
+    q
+  }
+
+  private def statePartitions(q: StreamingQuery): Set[Long] =
+    q.recentProgress.flatMap(_.stateOperators).map(_.numShufflePartitions).toSet
+
+  test("new checkpoint without an explicit setting gets one state partition per task slot") {
+    val (_, cfg) = daemonDirs("slots")
+    val q = drain(unsetSession(), cfg)
+    assert(spark.sparkContext.defaultParallelism !== 200)
+    assert(statePartitions(q) === Set(spark.sparkContext.defaultParallelism.toLong))
+  }
+
+  test("an explicit spark.sql.shuffle.partitions wins and is left as set") {
+    val (_, cfg) = daemonDirs("explicit")
+    val s = unsetSession()
+    s.conf.set(partitionsKey, "3")
+    assert(statePartitions(drain(s, cfg)) === Set(3L))
+    assert(s.conf.get(partitionsKey) === "3")
+  }
+
+  test("Main.start leaves the caller's session conf unchanged") {
+    val (_, cfg) = daemonDirs("restore")
+    val s = unsetSession()
+    val before = s.conf.getAll
+    val q = Main.start(s, cfg, poster = RecordingPoster, trigger = Trigger.AvailableNow())
+    try assert(s.conf.getAll === before)
+    finally q.awaitTermination()
+  }
+
+  test("a checkpoint resumes with the state partition count it was created with") {
+    val (src, cfg) = daemonDirs("resume")
+    val first = unsetSession()
+    first.conf.set(partitionsKey, "7")
+    assert(statePartitions(drain(first, cfg)) === Set(7L))
+    Files.writeString(new java.io.File(src, "b.txt").toPath, envelope("u2", 2000) + "\n")
+    val q = drain(unsetSession(), cfg)
+    assert(statePartitions(q) === Set(7L))
+    val sent = RecordingPoster.bodies.mkString("\n")
+    assert(sent.contains("\"device_id\":\"d-u2\""))
+    assert(!sent.contains("\"device_id\":\"d-u1\""))
   }
 }

@@ -62,6 +62,53 @@ class StreamingSinkSpec extends SparkTestBase {
     assert(RecordingPoster.bodies.size === 3) // 10 + 10 + 5
   }
 
+  test("sink never splits an $identify from its event across POST bodies") {
+    // Messages laid out so that a blind cut every 5 records would fall
+    // inside a pair at every cut: each record index ≡ 4 (mod 5) is an
+    // $identify. Pairs and single events are mixed around those cuts.
+    val max = 5
+    val pairs = mutable.Buffer.empty[Boolean]
+    var pos = 0
+    while (pos < 60) {
+      val pair = pos % max != 3
+      pairs += pair
+      pos += (if (pair) 2 else 1)
+    }
+    val rows = pairs.zipWithIndex.map { case (p, i) =>
+      envelope(s"u$i", "e", 1000L + i, withIdentify = p) }.toSeq.toDF("value")
+    val flat = EventEtl.pipeline(rows, Key).coalesce(1)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def bodies(maxPerRequest: Int): Seq[Seq[(String, String)]] = {
+      RecordingPoster.reset()
+      AmplitudeSink.send(flat, AmplitudeSink.Config(
+        url = "http://stub/batch", apiKey = "k", maxPerRequest = maxPerRequest,
+        poster = RecordingPoster))
+      RecordingPoster.bodies.toSeq.map { b =>
+        val ev = mapper.readTree(b).get("events")
+        (0 until ev.size).map(j =>
+          (ev.get(j).get("event_type").asText, ev.get(j).get("user_id").asText))
+      }
+    }
+    def assertPairsWhole(bs: Seq[Seq[(String, String)]]): Unit = bs.foreach { b =>
+      b.zipWithIndex.filter(_._1._1 == "$identify").foreach { case ((_, uid), j) =>
+        assert(j + 1 < b.size, s"identify of $uid ends a body")
+        assert(b(j + 1) === (("e", uid)))
+      }
+    }
+    val capped = bodies(max)
+    val records = capped.flatten
+    assert(records.size === pairs.size + pairs.count(identity))
+    // the input straddles every blind cut
+    assert((max - 1 until records.size by max).forall(records(_)._1 == "$identify"))
+    assertPairsWhole(capped)
+    assert(capped.forall(_.size <= max))
+    // only a lone pair may exceed a cap of one
+    val single = bodies(1)
+    assertPairsWhole(single)
+    assert(single.flatten === records)
+    assert(single.forall(b => b.size == 1 || (b.size == 2 && b.head._1 == "$identify")))
+  }
+
   test("sink retries transient failures, then succeeds") {
     FlakyPoster.reset(failures = 2)
     val flat = EventEtl.pipeline(Seq(envelope("u1", "e", 5)).toDF("value"), Key)
