@@ -4,10 +4,12 @@ package graft
   * required knobs, validated up front with a fatal error listing everything
   * missing (the reference exits 1 on the first missing var; we report all).
   *
-  * `maxEventsPerBatch` plays the reference's `MAX_EVENTS_PER_BATCH` role via
-  * trigger sizing (`maxFilesPerTrigger` / `maxOffsetsPerTrigger`) and the
-  * sink's `maxPerRequest`; graceful shutdown is `query.stop()` on a JVM
-  * shutdown hook — the SIGINT/SIGTERM analog (`synchronous-pull.js:36-42`).
+  * `maxEventsPerBatch` plays the reference's `MAX_EVENTS_PER_BATCH` role
+  * twice: as the file source's `maxFilesPerTrigger`, where it caps the
+  * FILES (pulls) per micro-batch, not the events (a file holds many
+  * envelopes), and as the sink's `maxPerRequest`, the events per POST
+  * body. Graceful shutdown is `query.stop()` on a JVM shutdown hook — the
+  * SIGINT/SIGTERM analog (`synchronous-pull.js:36-42`).
   */
 final case class GraftConfig(
     amplitudeApiKey: String,

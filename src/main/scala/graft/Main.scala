@@ -14,11 +14,14 @@ import graft.streaming.StreamingPipeline
   *   - env validation → [[GraftConfig.fromEnv]] (fatal, lists ALL missing
   *     vars; reference `startup.error`, `synchronous-pull.js:18-21`)
   *   - pull loop with MAX_EVENTS_PER_BATCH → micro-batch trigger with
-  *     `maxFilesPerTrigger` (`synchronous-pull.js:31-34,44`)
+  *     `maxFilesPerTrigger` = `maxEventsPerBatch` (`synchronous-pull.js:31-34,44`):
+  *     it caps the FILES (pulls) per trigger, not the events; each file
+  *     holds many envelopes. The same value caps the events per POST body.
   *   - transform + send + retry → [[StreamingPipeline]] / [[AmplitudeSink]]
   *   - ack → checkpoint commit after a successful `foreachBatch`
   *   - `events.processed` per-batch log (`synchronous-pull.js:94-101`) →
-  *     [[Main.ProgressLogger]] over `observedMetrics`
+  *     [[Main.ProgressLogger]] over `observedMetrics`, registered once per
+  *     session however often the stream restarts
   *   - SIGINT/SIGTERM graceful stop (`synchronous-pull.js:36-42,107-109`) →
   *     JVM shutdown hook calling `query.stop()`; the current micro-batch
   *     finishes (and acks) before the process exits, matching the
@@ -101,7 +104,10 @@ object Main {
 
   /** Compose config → source → transform → sink and start the stream.
     * `poster`/`trigger` are injectable for tests (recording transport,
-    * `Trigger.AvailableNow`). Without an explicit
+    * `Trigger.AvailableNow`). [[ProgressLogger]] is added to
+    * `spark.streams` only if it is not there yet: the listener bus keeps
+    * duplicates, and [[runSupervised]] calls this on every restart.
+    * Without an explicit
     * `spark.sql.shuffle.partitions` the state partition count is the task
     * slots; the conf is set only while `start()` clones the session into
     * the query and the caller's conf is restored after. A resumed
@@ -109,7 +115,8 @@ object Main {
   def start(spark: SparkSession, cfg: GraftConfig,
       poster: AmplitudeSink.Poster = AmplitudeSink.HttpPoster,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    spark.streams.addListener(ProgressLogger)
+    if (!spark.streams.listListeners().contains(ProgressLogger))
+      spark.streams.addListener(ProgressLogger)
     val raw = StreamingPipeline.readEnvelopes(spark, cfg.sourceDir,
       maxFilesPerTrigger = Some(cfg.maxEventsPerBatch))
     val flat = StreamingPipeline.transform(raw, cfg.hmacKey)

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.etl.EventEtl
@@ -31,12 +32,34 @@ object StreamingPipeline {
 
   /** Raw envelope stream from a directory of text files (one base64 envelope
     * per line) — the harness stand-in for a Pub/Sub/Kafka source; swap
-    * `format` for kafka in production (the chain is source-agnostic). */
+    * `format` for kafka in production (the chain is source-agnostic).
+    *
+    * The source stats each micro-batch's files on the driver. Its
+    * `getBatch` indexes the batch's file paths, and above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (default 32)
+    * paths Spark lists them in a distributed job, one task per path. That
+    * job is meant for recursing remote directory trees; these paths are
+    * leaf files the source already listed, and the job cost most of a
+    * drain batch. So unless the session sets the threshold explicitly
+    * (an explicit value wins), the relation is built on a clone of the
+    * session with the threshold at `Int.MaxValue`, and the plan is
+    * rebound to `spark`: the query runs on, and is reported by, the
+    * caller's `spark.streams`, and the caller's conf is unchanged. Spark
+    * reads the threshold from the session the relation was built with,
+    * not from the one `writeStream.start()` clones. */
   def readEnvelopes(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.format("text")
+    val key = SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key
+    val source =
+      if (GraftBridge.confContains(spark, key)) spark
+      else {
+        val clone = GraftBridge.cloneSession(spark)
+        clone.conf.set(key, Int.MaxValue.toLong)
+        clone
+      }
+    val r = source.readStream.format("text")
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.load(dir).withColumnRenamed("value", "value")
+    GraftBridge.ofRows(spark, r.load(dir))
   }
 
   /** The full transform: parse → watermarked message-level dedup → flatten.

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 import java.util.Base64
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -150,5 +152,62 @@ class MainSpec extends SparkTestBase {
     val sent = RecordingPoster.bodies.mkString("\n")
     assert(sent.contains("\"device_id\":\"d-u2\""))
     assert(!sent.contains("\"device_id\":\"d-u1\""))
+  }
+
+  test("two starts on one session register ProgressLogger once") {
+    val (_, cfg) = daemonDirs("listener")
+    val s = spark.newSession()
+    drain(s, cfg).stop()
+    drain(s, cfg).stop()
+    assert(s.streams.listListeners().count(_ eq Main.ProgressLogger) === 1)
+  }
+
+  private val thresholdKey = SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key
+
+  /** Drains a 40-file backlog (above the default listing threshold of 32)
+    * in one AvailableNow batch through `runSupervised`, checks that every
+    * event was posted, and returns how many jobs listed the batch's files
+    * in parallel. */
+  private def drainBacklog(s: SparkSession, tag: String): Int = {
+    val src = Files.createTempDirectory(s"graft-$tag-src").toFile
+    val ckpt = Files.createTempDirectory(s"graft-$tag-ckpt").toFile
+    val n = 40
+    for (i <- 0 until n)
+      Files.writeString(new java.io.File(src, f"f$i%02d.txt").toPath,
+        envelope(s"u$i", 1000L + i) + "\n")
+    val cfg = GraftConfig(
+      amplitudeApiKey = "key-l", hmacKey = "graft-test-key",
+      maxEventsPerBatch = n, sourceDir = src.getAbsolutePath,
+      checkpointDir = ckpt.getAbsolutePath)
+    val listings = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(_.startsWith("Listing leaf files"))) listings.incrementAndGet()
+    }
+    RecordingPoster.reset()
+    spark.sparkContext.addSparkListener(l)
+    try {
+      assert(Main.runSupervised(s, cfg, poster = RecordingPoster,
+        trigger = Trigger.AvailableNow(), maxRestarts = 0) === 0)
+      Thread.sleep(300) // listener delivery lag
+    } finally spark.sparkContext.removeSparkListener(l)
+    val sent = RecordingPoster.bodies.mkString("\n")
+    for (i <- 0 until n) assert(sent.contains(s"\"device_id\":\"d-u$i\""), s"u$i not posted")
+    listings.get()
+  }
+
+  test("the file source stats a batch's files on the driver: no listing job") {
+    val s = spark.newSession()
+    assert(!GraftBridge.confContains(s, thresholdKey))
+    assert(drainBacklog(s, "stat") === 0)
+    assert(!GraftBridge.confContains(s, thresholdKey))
+  }
+
+  test("an explicit listing threshold wins and is left as set") {
+    val s = spark.newSession()
+    s.conf.set(thresholdKey, "8")
+    assert(drainBacklog(s, "list") > 0)
+    assert(s.conf.get(thresholdKey) === "8")
   }
 }
