@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
@@ -27,16 +29,35 @@ import graft.streaming.StreamingPipeline
   *     finishes (and acks) before the process exits, matching the
   *     reference's finish-current-iteration semantics.
   *
-  * State partitions: the insert_id dedup state is split into
-  * `spark.sql.shuffle.partitions` partitions, and Spark fixes that count in
-  * a checkpoint's offset log at its first start; every restart resumes with
-  * the recorded count. [[start]] sizes a NEW checkpoint to the task slots
-  * (`defaultParallelism`) unless the session sets the conf explicitly:
-  * Spark's default of 200 partitions costs a task, a state-store commit and
-  * a POST body per partition per micro-batch, whatever the state's size.
-  * On a cluster, set `spark.sql.shuffle.partitions` (or
-  * `spark.default.parallelism`) before the first start: executors may not
-  * have registered yet when `defaultParallelism` is read.
+  * Session defaults ([[sessionDefaults]]): the daemon runs with three
+  * settings of its own, each only where the caller's session does not set
+  * the key (an explicit setting always wins, and the caller's conf is
+  * never changed):
+  *   - state partitions: the insert_id dedup state is split into
+  *     `spark.sql.shuffle.partitions` partitions, and Spark fixes that
+  *     count in a checkpoint's offset log at its first start; every restart
+  *     resumes with the recorded count. A NEW checkpoint gets the task slots
+  *     (`defaultParallelism`): Spark's default of 200 partitions costs a
+  *     task, a state-store commit and a POST body per partition per
+  *     micro-batch, whatever the state's size. On a cluster, set
+  *     `spark.sql.shuffle.partitions` (or `spark.default.parallelism`)
+  *     before the first start: executors may not have registered yet when
+  *     `defaultParallelism` is read.
+  *   - listing threshold: see [[StreamingPipeline.readEnvelopes]].
+  *   - checkpoint file manager: a checkpoint on the local filesystem is
+  *     written through Hadoop's FileSystem API
+  *     (`FileSystemBasedCheckpointFileManager`) instead of Spark's default
+  *     FileContext one. Hadoop without its native library (libhadoop)
+  *     forks `readlink` for every local stat, and FileContext's rename
+  *     stats the source, the destination and both `.crc` twins first:
+  *     about 90 forks per micro-batch, all paid in the commit that acks
+  *     it. The FileSystem API renames with one POSIX rename and stats
+  *     without a shell; one `chmod` fork per file create remains. No
+  *     rename atomicity is lost: FileContext's local rename is itself
+  *     check-then-rename ("deals with overwrite in a non-atomic way").
+  *     The files on disk are the same (deltas, Spark's checksum sidecars,
+  *     Hadoop's `.crc` files), so a checkpoint resumes under either
+  *     manager. HDFS and object stores keep FileContext.
   */
 object Main {
 
@@ -107,18 +128,19 @@ object Main {
     * `Trigger.AvailableNow`). [[ProgressLogger]] is added to
     * `spark.streams` only if it is not there yet: the listener bus keeps
     * duplicates, and [[runSupervised]] calls this on every restart.
-    * Without an explicit
-    * `spark.sql.shuffle.partitions` the state partition count is the task
-    * slots; the conf is set only while `start()` clones the session into
-    * the query and the caller's conf is restored after. A resumed
-    * checkpoint keeps the count it was created with. */
+    * Two sessions read the [[sessionDefaults]]: the clone the file source
+    * is built on (it keeps `sources/0`), and the clone `start()` makes
+    * for the query (offset and commit logs, state stores). The defaults
+    * are set on the first and only around `start()` on the caller's
+    * session, so the caller's conf is unchanged afterwards. */
   def start(spark: SparkSession, cfg: GraftConfig,
       poster: AmplitudeSink.Poster = AmplitudeSink.HttpPoster,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
     if (!spark.streams.listListeners().contains(ProgressLogger))
       spark.streams.addListener(ProgressLogger)
+    val defaults = sessionDefaults(spark, cfg.checkpointDir)
     val raw = StreamingPipeline.readEnvelopes(spark, cfg.sourceDir,
-      maxFilesPerTrigger = Some(cfg.maxEventsPerBatch))
+      maxFilesPerTrigger = Some(cfg.maxEventsPerBatch), conf = defaults)
     val flat = StreamingPipeline.transform(raw, cfg.hmacKey)
     val writer = StreamingPipeline.writer(flat,
       AmplitudeSink.Config(
@@ -128,12 +150,23 @@ object Main {
         timeoutMs = cfg.httpTimeoutMs,
         poster = poster),
       cfg.checkpointDir, trigger)
-    val key = SQLConf.SHUFFLE_PARTITIONS.key
-    if (GraftBridge.confContains(spark, key)) writer.start()
-    else {
-      spark.conf.set(key, spark.sparkContext.defaultParallelism.toLong)
-      try writer.start() finally spark.conf.unset(key)
-    }
+    defaults.foreach { case (k, v) => spark.conf.set(k, v) }
+    try writer.start() finally defaults.keys.foreach(spark.conf.unset)
+  }
+
+  /** The daemon's session defaults (see the object doc) that `spark` does
+    * not set explicitly: state partitions at the task slots, the listing
+    * threshold at `Int.MaxValue`, and, for a checkpoint on the local
+    * filesystem, the FileSystem-based checkpoint file manager. */
+  def sessionDefaults(spark: SparkSession, checkpointDir: String): Map[String, String] = {
+    val localCheckpoint = new Path(checkpointDir)
+      .getFileSystem(GraftBridge.hadoopConf(spark)).isInstanceOf[LocalFileSystem]
+    (Seq(
+      SQLConf.SHUFFLE_PARTITIONS.key -> spark.sparkContext.defaultParallelism.toString,
+      SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key -> Int.MaxValue.toString) ++
+      Option.when(localCheckpoint)(GraftBridge.checkpointFileManagerKey ->
+        classOf[FileSystemBasedCheckpointFileManager].getName))
+      .filterNot { case (k, _) => GraftBridge.confContains(spark, k) }.toMap
   }
 
   /** The reference's `events.processed` info log per batch

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.etl.EventEtl
@@ -24,7 +23,11 @@ import graft.sink.AmplitudeSink
   *   - send + retry         → [[AmplitudeSink.send]] in `foreachBatch`; a
   *     terminal failure fails the batch, no checkpoint commit, redelivery —
   *     the reference's no-ack-on-failure path (`synchronous-pull.js:83-86`)
-  *   - ack                  → checkpoint offset commit after `foreachBatch`
+  *   - ack                  → checkpoint offset commit after `foreachBatch`;
+  *     a local checkpoint is written through Hadoop's FileSystem API, not
+  *     FileContext, which forks `readlink` per stat without libhadoop
+  *     (see [[graft.Main]]; HDFS keeps FileContext, an explicit
+  *     `spark.sql.streaming.checkpointFileManagerClass` wins)
   *   - batch metrics (O14)  → `observe()` counters surfaced through
   *     `StreamingQueryProgress.observedMetrics`
   */
@@ -34,27 +37,30 @@ object StreamingPipeline {
     * per line) — the harness stand-in for a Pub/Sub/Kafka source; swap
     * `format` for kafka in production (the chain is source-agnostic).
     *
-    * The source stats each micro-batch's files on the driver. Its
-    * `getBatch` indexes the batch's file paths, and above
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (default 32)
-    * paths Spark lists them in a distributed job, one task per path. That
-    * job is meant for recursing remote directory trees; these paths are
-    * leaf files the source already listed, and the job cost most of a
-    * drain batch. So unless the session sets the threshold explicitly
-    * (an explicit value wins), the relation is built on a clone of the
-    * session with the threshold at `Int.MaxValue`, and the plan is
-    * rebound to `spark`: the query runs on, and is reported by, the
-    * caller's `spark.streams`, and the caller's conf is unchanged. Spark
-    * reads the threshold from the session the relation was built with,
-    * not from the one `writeStream.start()` clones. */
+    * The relation is built on a clone of `spark` with `conf` set (when it
+    * is non-empty) and the plan is rebound to `spark`: the query runs on,
+    * and is reported by, the caller's `spark.streams`, and the caller's
+    * conf is unchanged. Spark reads two of the daemon's defaults
+    * ([[graft.Main.sessionDefaults]]) from the session the relation was
+    * built with, not from the one `writeStream.start()` clones:
+    *   - the listing threshold. The source stats each micro-batch's files
+    *     on the driver: its `getBatch` indexes the batch's file paths, and
+    *     above `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    *     (default 32) paths Spark lists them in a distributed job, one task
+    *     per path. That job is meant for recursing remote directory trees;
+    *     these paths are leaf files the source already listed, and the job
+    *     cost most of a drain batch. The daemon sets it to `Int.MaxValue`.
+    *   - the checkpoint file manager of the source's own log,
+    *     `sources/0`, which Spark opens at query init, after `start()`
+    *     returns. */
   def readEnvelopes(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val key = SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key
+      maxFilesPerTrigger: Option[Int] = None,
+      conf: Map[String, String] = Map.empty): DataFrame = {
     val source =
-      if (GraftBridge.confContains(spark, key)) spark
+      if (conf.isEmpty) spark
       else {
         val clone = GraftBridge.cloneSession(spark)
-        clone.conf.set(key, Int.MaxValue.toLong)
+        conf.foreach { case (k, v) => clone.conf.set(k, v) }
         clone
       }
     val r = source.readStream.format("text")
@@ -73,6 +79,17 @@ object StreamingPipeline {
     * nothing after [[EventEtl.flatten]], and their shared null insert_id
     * would pile them onto one state partition.
     *
+    * A message without a parseable publish time has a null event time.
+    * Spark never judges a null event time late and never moves the
+    * watermark with it, so the message is sent. Its dedup entry expires at
+    * the next eviction, so a copy redelivered in a later batch may be sent
+    * again; Amplitude's own `insert_id` dedup absorbs that. There is no
+    * fallback to `current_timestamp()`: one such message would move the
+    * watermark to wall-clock time less the delay, and every backlog
+    * message behind it would be dropped as late, in batches still
+    * committed (acked). Spark would also inline each batch's timestamp
+    * into the generated code and recompile the parse stage every batch.
+    *
     * The dedup state has `spark.sql.shuffle.partitions` partitions, fixed
     * at the checkpoint's first start ([[graft.Main.start]] sizes it to the
     * task slots). */
@@ -85,8 +102,7 @@ object StreamingPipeline {
         sum(when(col("valid") && col("session_repaired"), 1L).otherwise(0L))
           .as("repaired_count"))
       .filter(col("valid"))
-      .withColumn("publish_ts",
-        coalesce(to_timestamp(col("publish_time")), current_timestamp()))
+      .withColumn("publish_ts", to_timestamp(col("publish_time")))
     val deduped =
       if (dedup)
         parsed.withWatermark("publish_ts", watermarkDelay)

@@ -4,8 +4,12 @@ import java.nio.file.Files
 import java.util.Base64
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -209,5 +213,96 @@ class MainSpec extends SparkTestBase {
     s.conf.set(thresholdKey, "8")
     assert(drainBacklog(s, "list") > 0)
     assert(s.conf.get(thresholdKey) === "8")
+  }
+
+  private val managerKey = GraftBridge.checkpointFileManagerKey
+  private val fileContextManager = classOf[FileContextBasedCheckpointFileManager].getName
+
+  /** Bytes and write operations Hadoop's FileContext API has written to
+    * `file:` paths in this JVM so far. Reads are left out: the state-store
+    * maintenance thread may still list an earlier query's checkpoint
+    * through FileContext while a test runs. */
+  private def fileContextWrites(): Long =
+    FileContext.getAllStatistics().asScala.collect {
+      case (uri, st) if uri.getScheme == "file" => st.getBytesWritten + st.getWriteOps
+    }.sum
+
+  /** The checkpoint's files relative to its root, sorted. */
+  private def checkpointFiles(cfg: GraftConfig): Seq[String] = {
+    val root = java.nio.file.Paths.get(cfg.checkpointDir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(root.relativize(_).toString).toSeq.sorted
+    finally walk.close()
+  }
+
+  test("a local checkpoint is written through the FileSystem API, not FileContext") {
+    val (src, cfg) = daemonDirs("fs")
+    Files.writeString(new java.io.File(src, "b.txt").toPath, envelope("u2", 2000) + "\n")
+    val s = spark.newSession()
+    assert(!GraftBridge.confContains(s, managerKey))
+    val before = fileContextWrites()
+    RecordingPoster.reset()
+    assert(Main.runSupervised(s, cfg, poster = RecordingPoster,
+      trigger = Trigger.AvailableNow(), maxRestarts = 0) === 0)
+    assert(fileContextWrites() === before)
+    val sent = RecordingPoster.bodies.mkString("\n")
+    assert(sent.contains("\"device_id\":\"d-u1\"") && sent.contains("\"device_id\":\"d-u2\""))
+    assert(!GraftBridge.confContains(s, managerKey))
+  }
+
+  test("an explicit checkpoint file manager wins and is left as set") {
+    val (_, cfg) = daemonDirs("fc")
+    val s = spark.newSession()
+    s.conf.set(managerKey, fileContextManager)
+    val conf = s.conf.getAll
+    val before = fileContextWrites()
+    drain(s, cfg)
+    assert(fileContextWrites() > before)
+    assert(s.conf.getAll === conf)
+  }
+
+  test("a FileContext-written checkpoint has the same files and resumes under the default") {
+    val (_, viaFs) = daemonDirs("same-fs")
+    drain(spark.newSession(), viaFs)
+    val (src, cfg) = daemonDirs("resume-fc")
+    val s = spark.newSession()
+    s.conf.set(managerKey, fileContextManager)
+    drain(s, cfg)
+    assert(checkpointFiles(cfg) === checkpointFiles(viaFs))
+    Files.writeString(new java.io.File(src, "b.txt").toPath, envelope("u2", 2000) + "\n")
+    val before = fileContextWrites()
+    drain(spark.newSession(), cfg)
+    assert(fileContextWrites() === before)
+    val sent = RecordingPoster.bodies.mkString("\n")
+    assert(sent.contains("\"device_id\":\"d-u2\""))
+    assert(!sent.contains("\"device_id\":\"d-u1\""))
+  }
+
+  /** An envelope whose attributes carry no publish timestamp. */
+  private def untimedEnvelope(uid: String, time: Long): String =
+    b64(s"""{"jsonPayload":{"user_id":"$uid","device_id":"d-$uid","event_type":"e","time":$time},"attributes":{}}""")
+
+  test("an envelope without a publish time does not make the backlog behind it late") {
+    val src = Files.createTempDirectory("graft-untimed-src").toFile
+    val ckpt = Files.createTempDirectory("graft-untimed-ckpt").toFile
+    // one file per batch, read in modification-time order: the untimed
+    // envelope first, then four 2024 envelopes
+    val lines = untimedEnvelope("u0", 1000L) +: (1 to 4).map(i => envelope(s"u$i", 1000L + i))
+    val t0 = System.currentTimeMillis() - 600000L
+    for ((line, i) <- lines.zipWithIndex) {
+      val f = new java.io.File(src, s"f$i.txt")
+      Files.writeString(f.toPath, line + "\n")
+      assert(f.setLastModified(t0 + i * 1000L))
+    }
+    val cfg = GraftConfig(
+      amplitudeApiKey = "key-u", hmacKey = "graft-test-key",
+      maxEventsPerBatch = 1, sourceDir = src.getAbsolutePath,
+      checkpointDir = ckpt.getAbsolutePath)
+    RecordingPoster.reset()
+    assert(Main.runSupervised(spark.newSession(), cfg, poster = RecordingPoster,
+      trigger = Trigger.AvailableNow(), maxRestarts = 0) === 0)
+    val sent = RecordingPoster.bodies.mkString("\n")
+    for (i <- 0 to 4) assert(sent.contains(s"\"device_id\":\"d-u$i\""), s"u$i not posted")
   }
 }
