@@ -186,8 +186,8 @@ object Main {
           r.flatMap(x => Option(x.getAs[String](f))).getOrElse("")
         log.info(
           s"""{"type":"events.processed"""" +
-            s""","minPublishedTime":"${s(batch, "min_publish_time")}"""" +
-            s""","maxPublishedTime":"${s(batch, "max_publish_time")}"""" +
+            s""","minPublishedTime":"${s(parse, "min_publish_time")}"""" +
+            s""","maxPublishedTime":"${s(parse, "max_publish_time")}"""" +
             s""","inputCount":${l(parse, "input_count")}""" +
             s""","outputCount":${l(batch, "output_count")}""" +
             s""","invalidCount":${l(parse, "invalid_count")}""" +

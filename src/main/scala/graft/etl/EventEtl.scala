@@ -47,7 +47,7 @@ object EventEtl {
 
   /** O2→O9 + identify trigger: one parsed diagnostic row per input message
     * (invalid messages included, marked `valid = false` — the reference acks
-    * and drops them silently, observable only through [[batchMetrics]]).
+    * and drops them silently, observable only through [[pipelineMetrics]]).
     * Caller columns other than `inputCol` pass through. */
   def parsed(raw: DataFrame, hmacKey: String, inputCol: String = "value"): DataFrame = {
     val keepIdx = raw.columns.zipWithIndex.collect { case (c, i) if c != inputCol => i }
@@ -118,37 +118,12 @@ object EventEtl {
   def pipelineDedup(raw: DataFrame, hmacKey: String, inputCol: String = "value"): DataFrame =
     flatten(parsed(raw, hmacKey, inputCol).dropDuplicates("insert_id"))
 
-  /** Lightweight publish-time/count extraction for metrics over raw
-    * envelopes — no hashing, no validation, so the metrics path stays cheap. */
-  def publishTimes(raw: DataFrame, inputCol: String = "value"): DataFrame = {
-    val vIdx = raw.columns.indexOf(inputCol)
-    val schema = StructType(Seq(StructField("publish_time", StringType)))
-    raw.mapPartitions { it =>
-      it.map { row =>
-        Row(EventParser.publishTimeOf(
-          if (row.isNullAt(vIdx)) null else row.getString(vIdx)))
-      }
-    }(Encoders.row(schema))
-  }
-
-  /** O11+O14 — per-batch observability: input count, output count, true
-    * min/max publish time over ALL input messages (the reference accumulates
-    * before the validity gate, `synchronous-pull.js:59-63`; its `else if`
-    * min/max bug B1 is deliberately not replicated — SURVEY.md §2.6). */
-  def batchMetrics(raw: DataFrame, flat: DataFrame, inputCol: String = "value"): DataFrame = {
-    val in = publishTimes(raw, inputCol).agg(
-      count(lit(1)).as("input_count"),
-      min(col("publish_time")).as("min_publish_time"),
-      max(col("publish_time")).as("max_publish_time"))
-    val out = flat.agg(count(lit(1)).as("output_count"))
-    in.crossJoin(out)
-      .select(col("input_count"), col("output_count"),
-        col("min_publish_time"), col("max_publish_time"))
-  }
-
-  /** Superset of [[batchMetrics]] computed in ONE pass over the parsed
-    * stream (no second scan of the raw input): input/output counts, min/max
-    * publish time over ALL messages (valid or not), plus the error
+  /** O11+O14 — per-batch observability in ONE pass over the parsed
+    * stream (no second scan of the raw input): input/output counts, true
+    * min/max publish time over ALL messages, valid or not (the reference
+    * accumulates before the validity gate, `synchronous-pull.js:59-63`; its
+    * `else if` min/max bug B1 is deliberately not replicated — SURVEY.md
+    * §2.6), plus the error
     * side-channels the reference logs per record — `invalid_count` (O6
     * drops, silent in the reference) and `repaired_count`
     * (`amplitude.validation.error`, `utils.js:66`; the reference logs only

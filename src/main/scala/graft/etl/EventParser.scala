@@ -123,17 +123,6 @@ object EventParser {
   private def hmac(key: String, args: Any*): String =
     HmacSha256.digest(key, args.toArray).toString
 
-  /** Publish-time attribute only — the cheap metrics path (no validation,
-    * no hashing; `synchronous-pull.js:59-63`). */
-  def publishTimeOf(value: String): String = {
-    if (value == null) return null
-    try {
-      val env = mapper.readTree(Base64.getMimeDecoder.decode(value))
-      if (env == null) null
-      else textOrNull(env.path("attributes").get("logging.googleapis.com/timestamp"))
-    } catch { case _: Exception => null }
-  }
-
   /** Full chain for one raw base64(JSON envelope) message. Never throws:
     * undecodable/unparseable input degrades to an invalid record (the
     * reference would kill the whole batch on a JSON.parse throw — an engine

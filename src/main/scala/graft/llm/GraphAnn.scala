@@ -251,7 +251,6 @@ object GraphAnn {
     // aggregation; the ladder's per-layer populations from one grouped
     // count — which also materializes a lazily-checkpointed ladder once,
     // before the per-layer filters re-read it.
-    label(b, "insertLayers gate")
     val lvlAggs = (0 to levels).map { l =>
       if (l == 0) count(lit(1)).cast("long").as(s"c$l")
       else sum(when(
@@ -262,14 +261,16 @@ object GraphAnn {
     // batch-level counts and ladder populations in ONE action: the two
     // sides union into a single (key, n) frame — batch levels keyed
     // negative to stay disjoint from layer numbers
-    val gateRows = layers.groupBy(col("layer").cast("int").as("__k"))
-      .agg(count(lit(1)).as("__n"))
-      .unionByName(
-        b.agg(lvlAggs.head, lvlAggs.tail: _*)
-          .select(posexplode(array((0 to levels).map(l =>
-            coalesce(col(s"c$l"), lit(0L))): _*)).as(Seq("__p", "__n")))
-          .select((-col("__p") - 1).cast("int").as("__k"), col("__n")))
-      .collect()
+    val gateRows = labeled(b, "insertLayers gate") {
+      layers.groupBy(col("layer").cast("int").as("__k"))
+        .agg(count(lit(1)).as("__n"))
+        .unionByName(
+          b.agg(lvlAggs.head, lvlAggs.tail: _*)
+            .select(posexplode(array((0 to levels).map(l =>
+              coalesce(col(s"c$l"), lit(0L))): _*)).as(Seq("__p", "__n")))
+            .select((-col("__p") - 1).cast("int").as("__k"), col("__n")))
+        .collect()
+    }
     val subCnt = {
       val m = gateRows.filter(_.getInt(0) < 0)
         .map(r => (-r.getInt(0) - 1) -> r.getLong(1)).toMap
@@ -834,9 +835,15 @@ object GraphAnn {
   /** Guide §1.5 job labels: AQE (Spark 4) submits every query stage —
     * including the result — from captured-thread-local futures, so the
     * UI/listeners see no user call site; the description is the only
-    * attribution that survives. Cost: a thread-local write per phase. */
-  private def label(df: DataFrame, s: String): Unit =
-    df.sparkSession.sparkContext.setJobDescription(s"gann:$s")
+    * attribution that survives. Cost: a thread-local write per phase.
+    * The caller's description is restored once `action` returns, so no
+    * later job on the thread carries a `gann:` label. */
+  private def labeled[T](df: DataFrame, s: String)(action: => T): T = {
+    val sc = df.sparkSession.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"gann:$s")
+    try action finally sc.setJobDescription(caller)
+  }
 
   /** Driver-held (qid → (qvec, qnorm)) view of a walk's query frame —
     * collected lazily ONCE (on the first LOCAL round) and shared by every
@@ -847,10 +854,10 @@ object GraphAnn {
     * first step — so driver scores stay bit-equal. */
   private final class QueryVecs(queries: DataFrame) {
     lazy val map: java.util.HashMap[Long, (Array[Double], Double)] = {
-      label(queries, "walk qLocal collect")
       val m = new java.util.HashMap[Long, (Array[Double], Double)]()
-      queries.select(col("qid"), col("qvec"), col("qnorm")).collect()
-        .foreach { r =>
+      labeled(queries, "walk qLocal collect") {
+        queries.select(col("qid"), col("qvec"), col("qnorm")).collect()
+      }.foreach { r =>
           val v = QueryVecs.toDoubles(r.get(1))
           if (v != null) m.put(r.getLong(0), (v, r.getDouble(2)))
         }
@@ -930,9 +937,10 @@ object GraphAnn {
         // distinct exchange per round, guide §2.4) AND is the local-mode
         // probe. Sorted ids keep the pushed IN plan deterministic.
         val taken = if (canProbe) {
-          label(beamDF, s"walk r$r/$iters take")
-          beamDF.select(col("qid"), col("id"), col("score"))
-            .limit(16 * MaxLiteralFrontier + 1).collect()
+          labeled(beamDF, s"walk r$r/$iters take") {
+            beamDF.select(col("qid"), col("id"), col("score"))
+              .limit(16 * MaxLiteralFrontier + 1).collect()
+          }
         } else Array.empty[org.apache.spark.sql.Row]
         // a (possibly truncated) take whose qid subset already rules the
         // flip out rules it out for EVERY later round (qids never grow);
@@ -967,14 +975,15 @@ object GraphAnn {
           // no pre-dedup of the expansion: scoring a duplicate (qid, id)
           // is one cheap dot product, and topEf's collect_set dedups —
           // zero extra exchanges per round (guide §2.4)
-          label(beamDF, s"walk r$r/$iters dist")
-          val expanded = gate(ids)
-            .join(broadcast(beamDF.select(col("qid"), col("id").as("src"))),
-              Seq("src"))
-            .select(col("qid"), col("dst").as("id"),
-              col("dst_vec").as("vec"), col("dst_norm").as("nrm"))
-          beamDF = topEf(beamDF.unionByName(scoreCand(queries, expanded)))
-            .localCheckpoint(eager = false)
+          beamDF = labeled(beamDF, s"walk r$r/$iters dist") {
+            val expanded = gate(ids)
+              .join(broadcast(beamDF.select(col("qid"), col("id").as("src"))),
+                Seq("src"))
+              .select(col("qid"), col("dst").as("id"),
+                col("dst_vec").as("vec"), col("dst_norm").as("nrm"))
+            topEf(beamDF.unionByName(scoreCand(queries, expanded)))
+              .localCheckpoint(eager = false)
+          }
           r += 1
         }
       }
@@ -995,10 +1004,11 @@ object GraphAnn {
           // no row, DotProduct's null contract.
           val qm = qVecs.map // forced BEFORE the round label (1 collect/walk)
           val ids = beamLocal.map(_._2).distinct.sorted
-          label(graph, s"walk r$r/$iters local")
-          val edges = gate(ids)
-            .select(col("src"), col("dst"), col("dst_vec"), col("dst_norm"))
-            .collect()
+          val edges = labeled(graph, s"walk r$r/$iters local") {
+            gate(ids)
+              .select(col("src"), col("dst"), col("dst_vec"), col("dst_norm"))
+              .collect()
+          }
           val bySrc = new java.util.HashMap[Long,
             scala.collection.mutable.ArrayBuffer[(Long, Array[Double], Double)]]()
           edges.foreach { e =>
@@ -1075,8 +1085,7 @@ object GraphAnn {
       recallBound)
 
   private def recallPanel(approx0: DataFrame, exact0: DataFrame,
-      recallBound: Double): DataFrame = {
-    label(approx0, "recall panel")
+      recallBound: Double): DataFrame = labeled(approx0, "recall panel") {
     val approx = approx0.select(col("qid"), col("neighbor_id"))
       .localCheckpoint(eager = false) // hits join + the panel count
     val exact = exact0.select(col("qid"), col("neighbor_id"))

@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   *  - '''no pointer''' (fresh dir): drive every batch, `0..finalId`.
   *  - '''pointer mid-prefix''' (`v < finalId`): a previous run died
   *    between batches — drive ONLY the un-applied suffix `v+1..finalId`,
-  *    so the resume never hands [[StatePointer.replayCheck]] an id behind
-  *    the pointer (that guard stays strict for genuine foreachBatch
+  *    so the resume never hands the [[StatePointer.applyOnce]] replay
+  *    guard an id behind the pointer (that guard stays strict for genuine foreachBatch
   *    callers, where a restarted id means a fresh checkpoint was pointed
   *    at existing state).
   *  - '''pointer at `finalId`''': the fold is complete — serve the

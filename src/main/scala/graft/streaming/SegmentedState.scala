@@ -4,15 +4,27 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The shared SEGMENTED-state discipline behind [[StreamingIndex]],
-  * [[StreamingSnapshot]], [[StreamingDedup]] and [[StreamingCentroids]]:
-  * each micro-batch appends an immutable `seg/v=<batchId>` directory
-  * (bytes ∝ batch), reads are merge-on-read over the live segment list,
-  * compaction folds the segments into a `base/v=<id>` directory, and
-  * [[vacuum]] deletes everything the retained manifests no longer
-  * reference. The manifest (`manifest/v=<batchId>.g=<gen>`) records the
-  * base version and the live segments; `_LATEST` ([[StatePointer]]) is
-  * the commit point.
+/** The shared SEGMENTED-state discipline behind [[StreamingIndex]] (and
+  * [[StreamingSearchIndex]] through it), [[StreamingSnapshot]],
+  * [[StreamingScd2]], [[StreamingDedup]], [[StreamingCentroids]],
+  * [[StreamingIvf]], [[StreamingMedia]], [[StreamingChunks]] and
+  * [[StreamingGraphAnn]]: each micro-batch appends an immutable
+  * `seg/v=<batchId>` directory (bytes ∝ batch), reads are merge-on-read
+  * over the live segment list, compaction folds the segments into a
+  * `base/v=<id>` directory, and [[vacuum]] deletes everything the
+  * retained manifests no longer reference. The manifest
+  * (`manifest/v=<batchId>.g=<gen>`) records the base version and the
+  * live segments; `_LATEST` ([[StatePointer]]) is the commit point.
+  *
+  * ==The shared fold==
+  * A state's `applyBatch` is [[StatePointer.applyOnce]] around its fold:
+  * split the change batch ([[splitChange]]), write the batch's segment
+  * subdirs and tombstones ([[writeDels]]), then [[appendSegment]] — the
+  * manifest append and, at `maxSegments`, the minor ([[tailMinor]]) or
+  * major compaction the state passes in. Its out-of-band `compact` is
+  * [[compact]] with the same major write. A PER-ROW artifact state
+  * (Chunks, Media, Ivf) is nothing but its artifact function:
+  * [[applyRows]] is its whole fold.
   *
   * ==Write protocol==
   * Per batch: segment dirs → manifest file → pointer. Readers resolve
@@ -56,15 +68,41 @@ object SegmentedState {
     }).sorted
   }
 
+  /** A text file of `key=value` lines, as a map. */
+  private def readKv(f: org.apache.hadoop.fs.FileSystem,
+      p: Path): Map[String, String] = {
+    val in = f.open(p)
+    val text = try new String(
+      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
+    text.linesIterator.map(_.trim).filter(_.nonEmpty)
+      .map { l => val Array(k, rest) = l.split("=", 2); (k, rest) }.toMap
+  }
+
+  /** The column names a state records once next to itself (`_META`), so
+    * readers need no out-of-band schema knowledge. */
+  private[streaming] def readMeta(spark: SparkSession,
+      dir: String): Map[String, String] =
+    readKv(fs(spark, dir), new Path(s"$dir/_META"))
+
+  /** Write `_META` as `key=value` lines unless the first batch already
+    * did. */
+  private[streaming] def writeMeta(spark: SparkSession, dir: String,
+      kv: (String, String)*): Unit = {
+    val f = fs(spark, dir)
+    val p = new Path(s"$dir/_META")
+    if (!f.exists(p)) {
+      val out = f.create(p, true)
+      try out.write(kv.map { case (k, v) => s"$k=$v\n" }.mkString
+        .getBytes("UTF-8"))
+      finally out.close()
+    }
+  }
+
   def readManifest(spark: SparkSession, dir: String, v: Long): Manifest = {
     val f = fs(spark, dir)
     val g = gens(f, dir, v).lastOption.getOrElse(
       throw new java.io.FileNotFoundException(s"no manifest for v=$v at $dir"))
-    val in = f.open(new Path(s"$dir/manifest/v=$v.g=$g"))
-    val text = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val kv = text.linesIterator.map(_.trim).filter(_.nonEmpty)
-      .map { l => val Array(k, rest) = l.split("=", 2); (k, rest) }.toMap
+    val kv = readKv(f, new Path(s"$dir/manifest/v=$v.g=$g"))
     def longs(s: String): Seq[Long] =
       s.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map(_.toLong)
     Manifest(
@@ -92,6 +130,155 @@ object SegmentedState {
     val dst = new Path(s"$dir/manifest/v=$v.g=$g")
     if (!f.rename(tmp, dst))
       throw new java.io.IOException(s"manifest rename failed: $dst")
+  }
+
+  /** The committed manifest; `what` names the state in the error
+    * thrown before its first batch lands. */
+  private[streaming] def current(spark: SparkSession, dir: String,
+      what: String): Manifest =
+    StatePointer.read(spark, dir) match {
+      case Some(v) => readManifest(spark, dir, v)
+      case None => throw new IllegalStateException(s"no $what at $dir yet")
+    }
+
+  /** The change-stream split: the adds (rows with `deleteCol` false, the
+    * flag dropped) and, under a `deleteCol`, the tombstone rows (flag
+    * dropped) shaped by `tomb` behind a lazy checkpoint — they feed an
+    * emptiness probe and at least one write. */
+  private[streaming] def splitChange(batch: DataFrame,
+      deleteCol: Option[String])(
+      tomb: DataFrame => DataFrame): (DataFrame, Option[DataFrame]) =
+    (deleteCol.fold(batch)(dc => batch.filter(!col(dc)).drop(dc)),
+      deleteCol.map(dc =>
+        tomb(batch.filter(col(dc)).drop(dc)).localCheckpoint(eager = false)))
+
+  /** The `del` side's schema: a tombstone row's `idCol` as `id`. */
+  private[streaming] def tombIds(idCol: String): DataFrame => DataFrame =
+    _.select(col(idCol).as("id"))
+
+  /** Write non-empty tombstones, shaped by `shape`, as
+    * `seg/v=<batchId>/del`; true when the batch carries any. */
+  private[streaming] def writeDels(dir: String, batchId: Long,
+      dels: Option[DataFrame])(
+      shape: DataFrame => DataFrame = identity): Boolean = {
+    val hasDel = dels.exists(d => !d.isEmpty)
+    if (hasDel)
+      shape(dels.get).write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/del")
+    hasDel
+  }
+
+  /** The segment-append step every segmented fold ends with: batch
+    * `batchId`'s segment joins the previous version's manifest
+    * (`hasDel`/`pureDel` record its tombstone side — [[Manifest]]), and
+    * at `maxSegments` live segments the state compacts: `minor` when it
+    * returns a manifest, else `major` writes `base/v=<batchId>` from the
+    * appended view and the base alone is live (`buckets` = the modulus it
+    * was partitioned with, when a reader prunes by it). The result is
+    * written as the batch's manifest; the pointer advance of
+    * [[StatePointer.applyOnce]] commits it. */
+  private[streaming] def appendSegment(spark: SparkSession, dir: String,
+      batchId: Long, prev: Option[Long], maxSegments: Int,
+      hasDel: Boolean = false, pureDel: Boolean = false,
+      buckets: Option[Int] = None)(minor: Manifest => Option[Manifest])(
+      major: (Manifest, Long) => Unit): Unit = {
+    val prevM = prev.fold(Manifest(None, Nil, Set.empty))(
+      readManifest(spark, dir, _))
+    val appended = prevM.copy(segments = prevM.segments :+ batchId,
+      dels = if (hasDel) prevM.dels + batchId else prevM.dels,
+      pure = if (pureDel) prevM.pure + batchId else prevM.pure)
+    val committed =
+      if (appended.segments.size < maxSegments) appended
+      else minor(appended).getOrElse {
+        major(appended, batchId)
+        Manifest(Some(batchId), Nil, Set.empty, buckets)
+      }
+    writeManifest(spark, dir, batchId, committed)
+  }
+
+  /** Out-of-band compaction at the committed version: `major` folds the
+    * live segments (and their tombstones) into `base/v=<v>` and the
+    * manifest is rewritten atomically as the next generation — no-op
+    * without segments. Content-identical, so the pointer stays put. */
+  private[streaming] def compact(spark: SparkSession, dir: String,
+      buckets: Option[Int] = None)(major: (Manifest, Long) => Unit): Unit =
+    StatePointer.read(spark, dir).foreach { v =>
+      val m = readManifest(spark, dir, v)
+      if (m.segments.nonEmpty) {
+        major(m, v)
+        writeManifest(spark, dir, v, Manifest(Some(v), Nil, Set.empty, buckets))
+      }
+    }
+
+  /** The del-less tail-run MINOR fold ([[minorPlan]]): each artifact
+    * subdir's `fold` of the run is swapped into this batch's segment
+    * ([[swapIn]]) and the run collapses to it ([[afterMinor]]). None when
+    * a major is due instead. */
+  private[streaming] def tailMinor(spark: SparkSession, dir: String,
+      batchId: Long, majorRatio: Double)(
+      folds: (String, Seq[Long] => DataFrame)*)(
+      appended: Manifest): Option[Manifest] =
+    minorPlan(spark, dir, appended, majorRatio).map { tailRun =>
+      for ((sub, fold) <- folds) swapIn(fold(tailRun), dir, batchId, sub)
+      afterMinor(appended, tailRun, batchId)
+    }
+
+  /** The union of artifact `sub` over a run of segments — a per-row
+    * artifact's whole minor fold. */
+  private[streaming] def concat(spark: SparkSession, dir: String,
+      sub: String): Seq[Long] => DataFrame =
+    _.map(v => spark.read.parquet(s"$dir/seg/v=$v/$sub"))
+      .reduce(_ unionByName _)
+
+  /** Major compaction of a per-row artifact: the [[rowView]] over `m`
+    * written to `base/v=<v>/<sub>`, hive-partitioned by `part` — an
+    * `idCol` hash bucket mod `nBuckets` when given (the bucket column is
+    * the one readers drop), else an artifact column. */
+  private[streaming] def compactRows(spark: SparkSession, dir: String,
+      sub: String, idCol: String, part: String, nBuckets: Option[Int])(
+      m: Manifest, v: Long): Unit = {
+    val view = rowView(spark, dir, m, sub, idCol, nBuckets.map(_ => part).toSeq)
+    writePartitioned(
+      nBuckets.fold(view)(n =>
+        view.withColumn(part, pmod(xxhash64(col(idCol)), lit(n.toLong)))),
+      s"$dir/base/v=$v/$sub", Seq(part))
+  }
+
+  /** The whole fold of a PER-ROW artifact state (rows keyed by `idCol`,
+    * nothing to decrement): ONLY the adds pass `artifact` and land as
+    * `seg/v=<batchId>/<sub>` (bytes ∝ batch), tombstone ids ride
+    * `seg/v=<batchId>/del`, a minor fold concatenates the del-less tail
+    * run (row versions bump to `batchId`, which stays ordered against
+    * every tombstone), and a major is [[compactRows]]. Erasure is the
+    * version-ordered anti join of [[rowView]], so erase → re-ingest churn
+    * is correct by the same rule. */
+  private[streaming] def applyRows(batch: DataFrame, dir: String,
+      batchId: Long, deleteCol: Option[String], idCol: String, sub: String,
+      maxSegments: Int, majorRatio: Double, part: String,
+      nBuckets: Option[Int])(artifact: DataFrame => DataFrame): Unit = {
+    require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
+    val spark = batch.sparkSession
+    StatePointer.applyOnce(spark, dir, batchId) { prev =>
+      val (adds, delIds) = splitChange(batch, deleteCol)(tombIds(idCol))
+      artifact(adds).write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/$sub")
+      val hasDel = writeDels(dir, batchId, delIds)()
+      appendSegment(spark, dir, batchId, prev, maxSegments, hasDel)(
+        tailMinor(spark, dir, batchId, majorRatio)(
+          sub -> concat(spark, dir, sub)))(
+        compactRows(spark, dir, sub, idCol, part, nBuckets))
+    }
+  }
+
+  /** Last-writer-wins over versioned rows: per `keyCols` key the row
+    * with the max `_v` wins, returned without `_v` in `rows`' column
+    * order — the fold of the LWW states' open/snapshot rows. */
+  private[streaming] def lastWriterWins(rows: DataFrame,
+      keyCols: Seq[String]): DataFrame = {
+    val payload = rows.columns.toSeq.filterNot(_ == "_v")
+    val rest = payload.filterNot(keyCols.contains)
+    rows.groupBy(keyCols.map(col): _*)
+      .agg(max_by(struct(rest.map(col): _*), col("_v")).as("_w"))
+      .select(keyCols.map(col) ++ rest.map(c => col(s"_w.$c").as(c)): _*)
+      .select(payload.map(col): _*)
   }
 
   /** Hive-partitioned compaction write that survives an EMPTY fold: a
@@ -227,7 +414,7 @@ object SegmentedState {
   /** Whether accumulated segment bytes have reached `majorRatio` × base
     * bytes — the deltas-are-no-longer-small trigger that forces a MAJOR
     * over any minor fold. */
-  private def segBytesDue(spark: SparkSession, dir: String,
+  private[streaming] def segBytesDue(spark: SparkSession, dir: String,
       appended: Manifest, majorRatio: Double): Boolean = {
     val f = fs(spark, dir)
     def du(p: String): Long = {

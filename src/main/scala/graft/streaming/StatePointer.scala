@@ -1,15 +1,24 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** The `_LATEST` version-pointer discipline shared by every maintained
-  * streaming state ([[StreamingSnapshot]], [[StreamingIndex]],
-  * [[StreamingScd2]]): a batch writes its output under version
+  * streaming state: a batch writes its output under version
   * directories, then atomically advances one small pointer — readers
   * never observe a half-written version, and a crash-replay of an
   * already-applied `foreachBatch` batchId is detected by the pointer and
   * skipped (the exactly-once mechanism for non-idempotent folds).
+  *
+  * ==The shared fold==
+  * Every streamed state's `applyBatch` is [[applyOnce]] around its own
+  * fold — batch plus previous version gives the next version's
+  * directories — and every `writer` is [[foldStream]] around that
+  * `applyBatch`. The segmented states ([[SegmentedState]]) end their
+  * fold with [[SegmentedState.appendSegment]]; the sliver states
+  * ([[StreamingQuantile]], [[StreamingRelease]]) write their own
+  * version directories.
   *
   * ==Marker files, not an overwritten file==
   * The pointer is the set of empty marker files `_LATEST.v=<batchId>`;
@@ -45,6 +54,15 @@ private[graft] object StatePointer {
     }
   }
 
+  /** The copy-on-write sliver `dir/<sub>/v=<committed>`; `what` names
+    * the state in the error thrown before its first batch lands. */
+  def versioned(spark: SparkSession, dir: String, sub: String,
+      what: String): DataFrame =
+    read(spark, dir) match {
+      case Some(v) => spark.read.parquet(s"$dir/$sub/v=$v")
+      case None => throw new IllegalStateException(s"no $what at $dir yet")
+    }
+
   /** Replay guard shared by every streamed-state `applyBatch`: returns
     * true when `batchId` IS the committed version (a crash-replay —
     * foreachBatch only ever re-delivers the immediately-uncommitted id,
@@ -70,6 +88,35 @@ private[graft] object StatePointer {
         true
       case _ => false
     }
+
+  /** Apply `fold` to `batchId` exactly once: a replay of the committed
+    * batch skips and an id behind the pointer throws ([[replayCheck]]);
+    * otherwise `fold` gets the previous committed version (None on a
+    * fresh dir), writes the batch's version directories, and the pointer
+    * then advances to `batchId` — the commit point. */
+  def applyOnce(spark: SparkSession, dir: String, batchId: Long)(
+      fold: Option[Long] => Unit): Unit =
+    read(spark, dir) match {
+      case Some(v) if v >= batchId => replayCheck(spark, dir, batchId)
+      case prev =>
+        fold(prev)
+        advance(spark, dir, batchId)
+    }
+
+  /** The `writeStream … foreachBatch` shell of every streamed state's
+    * `writer`: `apply` folds each micro-batch, then every
+    * `vacuumEvery`-th batch (0 = never) runs `vacuum`. */
+  def foldStream(stream: DataFrame, checkpointDir: String, trigger: Trigger,
+      vacuumEvery: Int = 0, vacuum: SparkSession => Unit = _ => ())(
+      apply: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        apply(df, batchId)
+        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
+          vacuum(df.sparkSession)
+      }
 
   /** Commit `batchId` as the latest version (see object doc). */
   def advance(spark: SparkSession, dir: String, batchId: Long): Unit = {

@@ -53,13 +53,6 @@ object StreamingCentroids {
   def latestVersion(spark: SparkSession, dir: String): Option[Long] =
     StatePointer.read(spark, dir)
 
-  private def manifest(spark: SparkSession, dir: String): Manifest =
-    latestVersion(spark, dir) match {
-      case Some(v) => SegmentedState.readManifest(spark, dir, v)
-      case None =>
-        throw new IllegalStateException(s"no centroid state at $dir yet")
-    }
-
   /** Version-ordered merge-on-read over the embedding rows
     * ([[SegmentedState.rowView]]): an erased id may re-ingest in a later
     * batch and the new vector survives. */
@@ -70,23 +63,16 @@ object StreamingCentroids {
   /** The maintained corpus embedding view. */
   def readEmbeddings(spark: SparkSession, dir: String,
       idCol: String = "vec_id"): DataFrame =
-    embView(spark, dir, manifest(spark, dir), idCol)
-
-  private def versioned(spark: SparkSession, dir: String,
-      sub: String): DataFrame =
-    latestVersion(spark, dir) match {
-      case Some(v) => spark.read.parquet(s"$dir/$sub/v=$v")
-      case None =>
-        throw new IllegalStateException(s"no centroid state at $dir yet")
-    }
+    embView(spark, dir, SegmentedState.current(spark, dir, "centroid state"),
+      idCol)
 
   def readLabels(spark: SparkSession, dir: String): DataFrame =
-    versioned(spark, dir, "labels")
+    StatePointer.versioned(spark, dir, "labels", "centroid state")
 
   /** The persisted pre-division sums — (cluster_id, dim, n_members,
     * s_micro). */
   def readSums(spark: SparkSession, dir: String): DataFrame =
-    versioned(spark, dir, "sums")
+    StatePointer.versioned(spark, dir, "sums", "centroid state")
 
   /** The published centroids — one division over the maintained sums. */
   def readCentroids(spark: SparkSession, dir: String): DataFrame =
@@ -107,96 +93,76 @@ object StreamingCentroids {
       "embedding column name 'b' is reserved by the compaction bucket " +
         "layout — rename the column")
     val spark = batch.sparkSession
-    latestVersion(spark, dir) match {
-      case Some(v) if v >= batchId => // applied or pointer mismatch
-        StatePointer.replayCheck(spark, dir, batchId)
-      case prev =>
-        val adds = deleteCol.fold(batch)(dc => batch.filter(!col(dc)).drop(dc))
-          .localCheckpoint(eager = false) // pair probe + fresh sums + segment
-        val delIds = deleteCol.map(dc => batch.filter(col(dc))
-          .select(col(idCol).as("id")).localCheckpoint(eager = false))
-        val prevM = prev.map(SegmentedState.readManifest(spark, dir, _))
-          .getOrElse(Manifest(None, Nil, Set.empty))
+    StatePointer.applyOnce(spark, dir, batchId) { prev =>
+      val (adds0, delIds) = SegmentedState.splitChange(batch, deleteCol)(
+        SegmentedState.tombIds(idCol))
+      val adds = adds0.localCheckpoint(eager = false) // probe + sums + segment
+      val prevM = prev.map(SegmentedState.readManifest(spark, dir, _))
+        .getOrElse(Manifest(None, Nil, Set.empty))
 
-        // ---- 1. pairs touching the batch, against the current view ----
-        val (labels0, sums0, pairs0) = prev match {
-          case Some(pv) => (spark.read.parquet(s"$dir/labels/v=$pv"),
-            spark.read.parquet(s"$dir/sums/v=$pv"),
-            spark.read.parquet(s"$dir/pairs/v=$pv"))
-          case None => (null, null, null)
-        }
-        val (grownLabels, grownSums, grownPairs) = prev match {
-          case None =>
-            val pairs = Similarity.cosinePairsBlocked(adds, blockCol,
-                threshold, idCol, vecCol)
-              .select(col("id_a"), col("id_b"))
-              .localCheckpoint(eager = false) // labels + sums + persist
-            val labels = Dedup.clusters(pairs)
-              .localCheckpoint(eager = false) // sums + persist
-            (labels, Similarity.clusterCentroidSums(adds, labels, idCol, vecCol),
-              pairs)
-          case Some(_) =>
-            val corpus = embView(spark, dir, prevM, idCol)
-            val newPairs = Similarity.cosinePairsIncremental(corpus, adds,
-                blockCol, threshold, idCol, vecCol)
-              .select(col("id_a"), col("id_b"))
-              .localCheckpoint(eager = false) // fold + persist
-            // fresh members' vectors come from corpus ∪ adds (a corpus
-            // doc can enter its first pair through a batch edge)
-            val embAll = corpus.unionByName(adds)
-            val (l1, s1) = Similarity.clusterCentroidSumsIncremental(
-              embAll, labels0, sums0, newPairs, idCol, vecCol)
-            (l1, s1, pairs0.unionByName(newPairs))
-        }
-        val hasDel = delIds.exists(d => !d.isEmpty)
-        val (labels1, sums1, pairs1) = delIds.filter(_ => hasDel) match {
-          case Some(d) =>
-            // delete fold runs against the pre-delete view (tombstoned
-            // rows still readable — the applyDeletes ordering)
-            val embAll = embView(spark, dir, prevM, idCol).unionByName(adds)
-            val gp = grownPairs.localCheckpoint(eager = false)
-            val (l2, s2) = Similarity.clusterCentroidSumsDelete(
-              embAll, grownLabels, grownSums, gp, d, idCol, vecCol)
-            val retained = gp
-              .join(broadcast(d), gp("id_a") === d("id"), "left_anti")
-              .join(broadcast(d), gp("id_b") === d("id"), "left_anti")
-            (l2, s2, retained)
-          case None => (grownLabels, grownSums, grownPairs)
-        }
-        labels1.write.mode("overwrite").parquet(s"$dir/labels/v=$batchId")
-        sums1.write.mode("overwrite").parquet(s"$dir/sums/v=$batchId")
-        pairs1.write.mode("overwrite").parquet(s"$dir/pairs/v=$batchId")
+      // ---- 1. pairs touching the batch, against the current view ----
+      val (labels0, sums0, pairs0) = prev match {
+        case Some(pv) => (spark.read.parquet(s"$dir/labels/v=$pv"),
+          spark.read.parquet(s"$dir/sums/v=$pv"),
+          spark.read.parquet(s"$dir/pairs/v=$pv"))
+        case None => (null, null, null)
+      }
+      val (grownLabels, grownSums, grownPairs) = prev match {
+        case None =>
+          val pairs = Similarity.cosinePairsBlocked(adds, blockCol,
+              threshold, idCol, vecCol)
+            .select(col("id_a"), col("id_b"))
+            .localCheckpoint(eager = false) // labels + sums + persist
+          val labels = Dedup.clusters(pairs)
+            .localCheckpoint(eager = false) // sums + persist
+          (labels, Similarity.clusterCentroidSums(adds, labels, idCol, vecCol),
+            pairs)
+        case Some(_) =>
+          val corpus = embView(spark, dir, prevM, idCol)
+          val newPairs = Similarity.cosinePairsIncremental(corpus, adds,
+              blockCol, threshold, idCol, vecCol)
+            .select(col("id_a"), col("id_b"))
+            .localCheckpoint(eager = false) // fold + persist
+          // fresh members' vectors come from corpus ∪ adds (a corpus
+          // doc can enter its first pair through a batch edge)
+          val embAll = corpus.unionByName(adds)
+          val (l1, s1) = Similarity.clusterCentroidSumsIncremental(
+            embAll, labels0, sums0, newPairs, idCol, vecCol)
+          (l1, s1, pairs0.unionByName(newPairs))
+      }
+      val hasDel = SegmentedState.writeDels(dir, batchId, delIds)()
+      val (labels1, sums1, pairs1) = delIds.filter(_ => hasDel) match {
+        case Some(d) =>
+          // delete fold runs against the pre-delete view (tombstoned
+          // rows still readable — the applyDeletes ordering)
+          val embAll = embView(spark, dir, prevM, idCol).unionByName(adds)
+          val gp = grownPairs.localCheckpoint(eager = false)
+          val (l2, s2) = Similarity.clusterCentroidSumsDelete(
+            embAll, grownLabels, grownSums, gp, d, idCol, vecCol)
+          val retained = gp
+            .join(broadcast(d), gp("id_a") === d("id"), "left_anti")
+            .join(broadcast(d), gp("id_b") === d("id"), "left_anti")
+          (l2, s2, retained)
+        case None => (grownLabels, grownSums, grownPairs)
+      }
+      labels1.write.mode("overwrite").parquet(s"$dir/labels/v=$batchId")
+      sums1.write.mode("overwrite").parquet(s"$dir/sums/v=$batchId")
+      pairs1.write.mode("overwrite").parquet(s"$dir/pairs/v=$batchId")
 
-        // ---- segment write: bytes ∝ batch ----
-        adds.write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/emb")
-        if (hasDel)
-          delIds.get.write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/del")
-
-        // ---- manifest + (amortized) compaction ----
-        val appended = Manifest(prevM.base, prevM.segments :+ batchId,
-          if (hasDel) prevM.dels + batchId else prevM.dels)
-        val committed =
-          if (appended.segments.size < maxSegments) appended
-          else SegmentedState.minorPlan(spark, dir, appended, majorRatio) match {
-            case None =>
-              SegmentedState.writePartitioned(
-                embView(spark, dir, appended, idCol)
-                  .withColumn("b", pmod(xxhash64(col(idCol)), lit(nBuckets.toLong))),
-                s"$dir/base/v=$batchId/emb", Seq("b"))
-              Manifest(Some(batchId), Nil, Set.empty)
-            case Some(tailRun) =>
-              // MINOR: pure concat of the tail run (see StreamingIvf —
-              // the version bump stays ordered against every tombstone)
-              SegmentedState.swapIn(tailRun
-                .map(v => spark.read.parquet(s"$dir/seg/v=$v/emb"))
-                .reduce(_ unionByName _),
-                dir, batchId, "emb")
-              SegmentedState.afterMinor(appended, tailRun, batchId)
-          }
-        SegmentedState.writeManifest(spark, dir, batchId, committed)
-        StatePointer.advance(spark, dir, batchId)
+      // ---- segment write: bytes ∝ batch ----
+      adds.write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/emb")
+      // ---- manifest + (amortized) compaction; minor = pure concat ----
+      SegmentedState.appendSegment(spark, dir, batchId, prev, maxSegments,
+          hasDel)(
+        SegmentedState.tailMinor(spark, dir, batchId, majorRatio)(
+          "emb" -> SegmentedState.concat(spark, dir, "emb")))(
+        compactTo(spark, dir, idCol, nBuckets))
     }
   }
+
+  private def compactTo(spark: SparkSession, dir: String, idCol: String,
+      nBuckets: Int): (Manifest, Long) => Unit =
+    SegmentedState.compactRows(spark, dir, "emb", idCol, "b", Some(nBuckets))
 
   /** Out-of-band compaction: fold the live segments (and their
     * tombstones) into a new bucket-partitioned base at the current
@@ -205,17 +171,7 @@ object StreamingCentroids {
   def compact(spark: SparkSession, dir: String,
       nBuckets: Int = DefaultBuckets,
       idCol: String = "vec_id"): Unit =
-    latestVersion(spark, dir).foreach { v =>
-      val m = SegmentedState.readManifest(spark, dir, v)
-      if (m.segments.nonEmpty) {
-        SegmentedState.writePartitioned(
-          embView(spark, dir, m, idCol)
-            .withColumn("b", pmod(xxhash64(col(idCol)), lit(nBuckets.toLong))),
-          s"$dir/base/v=$v/emb", Seq("b"))
-        SegmentedState.writeManifest(spark, dir, v,
-          Manifest(Some(v), Nil, Set.empty))
-      }
-    }
+    SegmentedState.compact(spark, dir)(compactTo(spark, dir, idCol, nBuckets))
 
   /** Reclaim superseded segments/bases/manifests and stale
     * labels/sums/pairs versions; `retain` > 1 = concurrent-reader grace
@@ -234,13 +190,8 @@ object StreamingCentroids {
       threshold: Double = 0.4,
       maxSegments: Int = DefaultMaxSegments,
       vacuumEvery: Int = 0): DataStreamWriter[org.apache.spark.sql.Row] =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyBatch(df, dir, batchId, deleteCol, blockCol, threshold,
-          maxSegments = maxSegments)
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          vacuum(df.sparkSession, dir)
-      }
+    StatePointer.foldStream(emb, checkpointDir, trigger, vacuumEvery,
+        vacuum(_, dir))(
+      applyBatch(_, dir, _, deleteCol, blockCol, threshold,
+        maxSegments = maxSegments))
 }

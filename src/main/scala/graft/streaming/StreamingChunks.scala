@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.llm.Multimodal
@@ -19,8 +18,9 @@ import graft.llm.Multimodal
   * version-ordered anti join ([[SegmentedState.rowView]]), erase →
   * re-ingest churn is correct by the same rule, minor folds concatenate
   * the del-less tail run, and major compaction buckets by a media-id
-  * hash. Replays are pointer-skipped / mismatch-thrown by
-  * [[StatePointer.replayCheck]] before any state dir is touched.
+  * hash — the [[SegmentedState.applyRows]] fold. Replays are
+  * pointer-skipped / mismatch-thrown by [[StatePointer.applyOnce]]
+  * before any state dir is touched.
   *
   * Serving: [[clipPairs]] runs the containment tail
   * ([[Multimodal.clipPairsFromChunks]]) over the merge-on-read view —
@@ -33,22 +33,14 @@ object StreamingChunks {
   val DefaultMaxSegments = 8
   val DefaultBuckets = 32
 
-  import SegmentedState.Manifest
-
   def latestVersion(spark: SparkSession, dir: String): Option[Long] =
     StatePointer.read(spark, dir)
 
-  private def manifest(spark: SparkSession, dir: String): Manifest =
-    latestVersion(spark, dir) match {
-      case Some(v) => SegmentedState.readManifest(spark, dir, v)
-      case None =>
-        throw new IllegalStateException(s"no chunk state at $dir yet")
-    }
-
   /** The maintained (media_id, band_hash) view over the live corpus. */
   def readChunks(spark: SparkSession, dir: String): DataFrame =
-    SegmentedState.rowView(spark, dir, manifest(spark, dir), "chnk",
-      "media_id", baseDrop = Seq("b"))
+    SegmentedState.rowView(spark, dir,
+      SegmentedState.current(spark, dir, "chunk state"), "chnk", "media_id",
+      baseDrop = Seq("b"))
 
   /** Containment pairs over the maintained state — zero media access. */
   def clipPairs(spark: SparkSession, dir: String, minShared: Int = 2,
@@ -71,64 +63,18 @@ object StreamingChunks {
       deleteCol: Option[String] = None,
       maxSegments: Int = DefaultMaxSegments,
       nBuckets: Int = DefaultBuckets, window: Int = 8, divisor: Int = 32,
-      majorRatio: Double = StreamingIndex.DefaultMajorRatio): Unit = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
-    val spark = batch.sparkSession
-    latestVersion(spark, dir) match {
-      case Some(v) if v >= batchId => // applied or pointer mismatch
-        StatePointer.replayCheck(spark, dir, batchId)
-      case prev =>
-        val adds = deleteCol.fold(batch)(dc => batch.filter(!col(dc)).drop(dc))
-        val delIds = deleteCol.map(dc => batch.filter(col(dc))
-          .select(col("media_id").as("id")).localCheckpoint(eager = false))
-        // ---- segment write: the batch is CHUNKED here, once ----
-        Multimodal.chunkTable(adds, window, divisor)
-          .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/chnk")
-        val hasDel = delIds.exists(d => !d.isEmpty)
-        if (hasDel)
-          delIds.get.write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/del")
-        // ---- manifest + (amortized) compaction ----
-        val prevM = prev.map(SegmentedState.readManifest(spark, dir, _))
-          .getOrElse(Manifest(None, Nil, Set.empty))
-        val appended = Manifest(prevM.base, prevM.segments :+ batchId,
-          if (hasDel) prevM.dels + batchId else prevM.dels)
-        val committed =
-          if (appended.segments.size < maxSegments) appended
-          else SegmentedState.minorPlan(spark, dir, appended, majorRatio) match {
-            case None => compactTo(spark, dir, appended, batchId, nBuckets)
-              Manifest(Some(batchId), Nil, Set.empty)
-            case Some(tailRun) =>
-              SegmentedState.swapIn(tailRun
-                .map(v => spark.read.parquet(s"$dir/seg/v=$v/chnk"))
-                .reduce(_ unionByName _),
-                dir, batchId, "chnk")
-              SegmentedState.afterMinor(appended, tailRun, batchId)
-          }
-        SegmentedState.writeManifest(spark, dir, batchId, committed)
-        StatePointer.advance(spark, dir, batchId)
-    }
-  }
-
-  private def compactTo(spark: SparkSession, dir: String, m: Manifest,
-      v: Long, nBuckets: Int): Unit =
-    SegmentedState.writePartitioned(
-      SegmentedState.rowView(spark, dir, m, "chnk", "media_id",
-          baseDrop = Seq("b"))
-        .withColumn("b", pmod(xxhash64(col("media_id")), lit(nBuckets.toLong))),
-      s"$dir/base/v=$v/chnk", Seq("b"))
+      majorRatio: Double = StreamingIndex.DefaultMajorRatio): Unit =
+    // the batch is CHUNKED here, once
+    SegmentedState.applyRows(batch, dir, batchId, deleteCol, "media_id",
+      "chnk", maxSegments, majorRatio, "b", Some(nBuckets))(
+      Multimodal.chunkTable(_, window, divisor))
 
   /** Out-of-band compaction at the current version (no-op without
     * segments); content-identical, manifest rewrite atomic. */
   def compact(spark: SparkSession, dir: String,
       nBuckets: Int = DefaultBuckets): Unit =
-    latestVersion(spark, dir).foreach { v =>
-      val m = SegmentedState.readManifest(spark, dir, v)
-      if (m.segments.nonEmpty) {
-        compactTo(spark, dir, m, v, nBuckets)
-        SegmentedState.writeManifest(spark, dir, v,
-          Manifest(Some(v), Nil, Set.empty))
-      }
-    }
+    SegmentedState.compact(spark, dir)(SegmentedState.compactRows(spark,
+      dir, "chnk", "media_id", "b", Some(nBuckets)))
 
   /** Reclaim superseded segments/bases/manifests; `retain` > 1 =
     * concurrent-reader grace window ([[SegmentedState.vacuum]]). */
@@ -143,13 +89,8 @@ object StreamingChunks {
       nBuckets: Int = DefaultBuckets,
       vacuumEvery: Int = 0,
       majorRatio: Double = StreamingIndex.DefaultMajorRatio): DataStreamWriter[org.apache.spark.sql.Row] =
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyBatch(df, dir, batchId, deleteCol, maxSegments, nBuckets,
-          majorRatio = majorRatio)
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          vacuum(df.sparkSession, dir)
-      }
+    StatePointer.foldStream(media, checkpointDir, trigger, vacuumEvery,
+        vacuum(_, dir))(
+      applyBatch(_, dir, _, deleteCol, maxSegments, nBuckets,
+        majorRatio = majorRatio))
 }

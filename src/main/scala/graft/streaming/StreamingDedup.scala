@@ -72,10 +72,7 @@ object StreamingDedup {
     StatePointer.read(spark, dir)
 
   private def manifest(spark: SparkSession, dir: String): Manifest =
-    latestVersion(spark, dir) match {
-      case Some(v) => SegmentedState.readManifest(spark, dir, v)
-      case None => throw new IllegalStateException(s"no dedup state at $dir yet")
-    }
+    SegmentedState.current(spark, dir, "dedup state")
 
   /** Version-ordered merge-on-read over a per-doc artifact
     * ([[SegmentedState.rowView]]): an erased id may re-ingest in a later
@@ -94,18 +91,12 @@ object StreamingDedup {
 
   /** The maintained near-dup pair list (id_a, id_b). */
   def readPairs(spark: SparkSession, dir: String): DataFrame =
-    latestVersion(spark, dir) match {
-      case Some(v) => spark.read.parquet(s"$dir/pairs/v=$v")
-      case None => throw new IllegalStateException(s"no dedup state at $dir yet")
-    }
+    StatePointer.versioned(spark, dir, "pairs", "dedup state")
 
   /** The maintained cluster labels (doc_id, cluster_id) — members only,
     * [[Dedup.clusters]]' contract. */
   def readLabels(spark: SparkSession, dir: String): DataFrame =
-    latestVersion(spark, dir) match {
-      case Some(v) => spark.read.parquet(s"$dir/labels/v=$v")
-      case None => throw new IllegalStateException(s"no dedup state at $dir yet")
-    }
+    StatePointer.versioned(spark, dir, "labels", "dedup state")
 
   /** Fold one batch into the persisted dedup state (see object doc).
     * Public so the batch-parity catalog rows drive the IDENTICAL code the
@@ -119,89 +110,72 @@ object StreamingDedup {
       majorRatio: Double = StreamingIndex.DefaultMajorRatio): Unit = {
     require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
     val spark = batch.sparkSession
-    latestVersion(spark, dir) match {
-      case Some(v) if v >= batchId => // applied or pointer mismatch
-        StatePointer.replayCheck(spark, dir, batchId)
-      case prev =>
-        val adds = deleteCol.fold(batch)(dc => batch.filter(!col(dc)).drop(dc))
-          .localCheckpoint(eager = false) // bands + shingles + probe
-        val delIds = deleteCol.map(dc => batch.filter(col(dc))
-          .select(col(idCol).as("id")).localCheckpoint(eager = false))
-        val prevM = prev.map(SegmentedState.readManifest(spark, dir, _))
-          .getOrElse(Manifest(None, Nil, Set.empty))
+    StatePointer.applyOnce(spark, dir, batchId) { prev =>
+      val (adds0, delIds) = SegmentedState.splitChange(batch, deleteCol)(
+        SegmentedState.tombIds(idCol))
+      val adds = adds0.localCheckpoint(eager = false) // bands + shingles + probe
+      val prevM = prev.map(SegmentedState.readManifest(spark, dir, _))
+        .getOrElse(Manifest(None, Nil, Set.empty))
 
-        // ---- 1. pair discovery against the CURRENT views ----
-        // ---- 2/3. label + pair-list fold (slivers, copy-on-write) ----
-        val grown = prev match {
-          case None => // first batch: no corpus yet — batch-internal truth
-            val np = Dedup.minhashNearDups(adds, threshold, w, k, bands,
-                maxBucket, idCol, textCol)
-              .select(col("id_a"), col("id_b"))
-              .localCheckpoint(eager = false) // clusters + persist
-            (Dedup.clusters(np), np)
-          case Some(pv) =>
-            val np = Dedup.incrementalNearDupsPrebuilt(adds,
-                artifactView(spark, dir, prevM, "bands", Nil),
-                artifactView(spark, dir, prevM, "shingles", Seq("b")),
-                threshold, w, k, bands, maxBucket, idCol, textCol)
-              .select(col("id_new").as("id_a"), col("id_other").as("id_b"))
-            (Dedup.clustersIncremental(
-                spark.read.parquet(s"$dir/labels/v=$pv"), np),
-              spark.read.parquet(s"$dir/pairs/v=$pv").unionByName(np))
-        }
-        val hasDel = delIds.exists(d => !d.isEmpty)
-        val (labels1, pairs1) = delIds.filter(_ => hasDel) match {
-          case Some(d) =>
-            val retained = grown._2
-              .join(broadcast(d), grown._2("id_a") === d("id"), "left_anti")
-              .join(broadcast(d), grown._2("id_b") === d("id"), "left_anti")
-              .localCheckpoint(eager = false) // delete fold + persist
-            (Dedup.clustersDelete(grown._1, grown._2, d), retained)
-          case None => grown
-        }
-        labels1.write.mode("overwrite").parquet(s"$dir/labels/v=$batchId")
-        pairs1.write.mode("overwrite").parquet(s"$dir/pairs/v=$batchId")
+      // ---- 1. pair discovery against the CURRENT views ----
+      // ---- 2/3. label + pair-list fold (slivers, copy-on-write) ----
+      val grown = prev match {
+        case None => // first batch: no corpus yet — batch-internal truth
+          val np = Dedup.minhashNearDups(adds, threshold, w, k, bands,
+              maxBucket, idCol, textCol)
+            .select(col("id_a"), col("id_b"))
+            .localCheckpoint(eager = false) // clusters + persist
+          (Dedup.clusters(np), np)
+        case Some(pv) =>
+          val np = Dedup.incrementalNearDupsPrebuilt(adds,
+              artifactView(spark, dir, prevM, "bands", Nil),
+              artifactView(spark, dir, prevM, "shingles", Seq("b")),
+              threshold, w, k, bands, maxBucket, idCol, textCol)
+            .select(col("id_new").as("id_a"), col("id_other").as("id_b"))
+          (Dedup.clustersIncremental(
+              spark.read.parquet(s"$dir/labels/v=$pv"), np),
+            spark.read.parquet(s"$dir/pairs/v=$pv").unionByName(np))
+      }
+      val hasDel = delIds.exists(d => !d.isEmpty)
+      val (labels1, pairs1) = delIds.filter(_ => hasDel) match {
+        case Some(d) =>
+          val retained = grown._2
+            .join(broadcast(d), grown._2("id_a") === d("id"), "left_anti")
+            .join(broadcast(d), grown._2("id_b") === d("id"), "left_anti")
+            .localCheckpoint(eager = false) // delete fold + persist
+          (Dedup.clustersDelete(grown._1, grown._2, d), retained)
+        case None => grown
+      }
+      labels1.write.mode("overwrite").parquet(s"$dir/labels/v=$batchId")
+      pairs1.write.mode("overwrite").parquet(s"$dir/pairs/v=$batchId")
 
-        // ---- segment writes: bytes ∝ batch ----
-        Dedup.bandTable(adds, w, k, bands, maxBucket, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/bands")
-        Dedup.shingleTable(adds, w, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/shingles")
-        if (hasDel)
-          delIds.get.write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/del")
+      // ---- segment writes: bytes ∝ batch ----
+      Dedup.bandTable(adds, w, k, bands, maxBucket, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/bands")
+      Dedup.shingleTable(adds, w, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/shingles")
+      // tombstones last: written before the fold, they cost one more
+      // Spark job per del-carrying batch
+      if (hasDel)
+        delIds.get.write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/del")
 
-        // ---- manifest + (amortized) compaction ----
-        val appended = Manifest(prevM.base, prevM.segments :+ batchId,
-          if (hasDel) prevM.dels + batchId else prevM.dels)
-        val committed =
-          if (appended.segments.size < maxSegments) appended
-          else SegmentedState.minorPlan(spark, dir, appended, majorRatio) match {
-            case None =>
-              compactTo(spark, dir, appended, batchId, maxBucket, nBuckets)
-              Manifest(Some(batchId), Nil, Set.empty)
-            case Some(tailRun) =>
-              // MINOR: concat the tail run; the band side is RE-CAPPED
-              // across the merged run (window-only cost) so every live
-              // segment keeps the ≤ maxBucket per-bucket invariant the
-              // probe-join bound rests on
-              SegmentedState.swapIn(Dedup.capBuckets(
-                tailRun.map(v => spark.read.parquet(s"$dir/seg/v=$v/bands"))
-                  .reduce(_ unionByName _),
-                maxBucket, "StreamingDedup.minor"),
-                dir, batchId, "bands")
-              SegmentedState.swapIn(tailRun
-                .map(v => spark.read.parquet(s"$dir/seg/v=$v/shingles"))
-                .reduce(_ unionByName _),
-                dir, batchId, "shingles")
-              SegmentedState.afterMinor(appended, tailRun, batchId)
-          }
-        SegmentedState.writeManifest(spark, dir, batchId, committed)
-        StatePointer.advance(spark, dir, batchId)
+      // ---- manifest + (amortized) compaction ----
+      SegmentedState.appendSegment(spark, dir, batchId, prev, maxSegments,
+          hasDel)(
+        SegmentedState.tailMinor(spark, dir, batchId, majorRatio)(
+          // the band side is RE-CAPPED across the merged run
+          // (window-only cost) so every live segment keeps the
+          // ≤ maxBucket per-bucket invariant the probe-join bound rests on
+          "bands" -> (run => Dedup.capBuckets(
+            SegmentedState.concat(spark, dir, "bands")(run), maxBucket,
+            "StreamingDedup.minor")),
+          "shingles" -> SegmentedState.concat(spark, dir, "shingles")))(
+        compactTo(spark, dir, maxBucket, nBuckets))
     }
   }
 
-  private def compactTo(spark: SparkSession, dir: String, m: Manifest,
-      v: Long, maxBucket: Int, nBuckets: Int): Unit = {
+  private def compactTo(spark: SparkSession, dir: String, maxBucket: Int,
+      nBuckets: Int)(m: Manifest, v: Long): Unit = {
     // re-apply the bucket cap across the merged corpus: a bucket
     // saturated by accumulation is pruned here exactly as bandTable
     // prunes one saturated at build time (drops observe()-surfaced)
@@ -209,24 +183,16 @@ object StreamingDedup {
       Dedup.capBuckets(artifactView(spark, dir, m, "bands", Nil), maxBucket,
         "StreamingDedup.compact"),
       s"$dir/base/v=$v/bands", Seq("band"))
-    SegmentedState.writePartitioned(
-      artifactView(spark, dir, m, "shingles", Seq("b"))
-        .withColumn("b", pmod(xxhash64(col("id")), lit(nBuckets.toLong))),
-      s"$dir/base/v=$v/shingles", Seq("b"))
+    SegmentedState.compactRows(spark, dir, "shingles", "id", "b",
+      Some(nBuckets))(m, v)
   }
 
   /** Out-of-band compaction at the current version (no-op without
     * segments); content-identical, manifest rewrite atomic. */
   def compact(spark: SparkSession, dir: String, maxBucket: Int = 4096,
       nBuckets: Int = DefaultBuckets): Unit =
-    latestVersion(spark, dir).foreach { v =>
-      val m = SegmentedState.readManifest(spark, dir, v)
-      if (m.segments.nonEmpty) {
-        compactTo(spark, dir, m, v, maxBucket, nBuckets)
-        SegmentedState.writeManifest(spark, dir, v,
-          Manifest(Some(v), Nil, Set.empty))
-      }
-    }
+    SegmentedState.compact(spark, dir)(compactTo(spark, dir, maxBucket,
+      nBuckets))
 
   /** Reclaim superseded segments/bases/manifests AND stale label/pair
     * versions. Pointer-skip makes replays safe after a vacuum; `retain`
@@ -244,13 +210,7 @@ object StreamingDedup {
       deleteCol: Option[String] = None, threshold: Double = 0.6,
       maxSegments: Int = DefaultMaxSegments,
       vacuumEvery: Int = 0): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyBatch(df, dir, batchId, deleteCol, threshold,
-          maxSegments = maxSegments)
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          vacuum(df.sparkSession, dir)
-      }
+    StatePointer.foldStream(docs, checkpointDir, trigger, vacuumEvery,
+        vacuum(_, dir))(
+      applyBatch(_, dir, _, deleteCol, threshold, maxSegments = maxSegments))
 }

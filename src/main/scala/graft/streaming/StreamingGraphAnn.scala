@@ -51,11 +51,7 @@ object StreamingGraphAnn {
     StatePointer.read(spark, dir)
 
   private def manifest(spark: SparkSession, dir: String): Manifest =
-    latestVersion(spark, dir) match {
-      case Some(v) => SegmentedState.readManifest(spark, dir, v)
-      case None =>
-        throw new IllegalStateException(s"no graph-ANN state at $dir yet")
-    }
+    SegmentedState.current(spark, dir, "graph-ANN state")
 
   /** The maintained graph view — [[GraphAnn.buildGraph]]'s schema (src,
     * dst, score_cos, dst_vec, dst_norm, b) over the live edge set. */
@@ -84,107 +80,94 @@ object StreamingGraphAnn {
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
     val spark = batch.sparkSession
-    latestVersion(spark, dir) match {
-      case Some(v) if v >= batchId => // applied or pointer mismatch
-        StatePointer.replayCheck(spark, dir, batchId)
-      case prev =>
-        val adds = deleteCol.fold(batch)(dc => batch.filter(!col(dc)).drop(dc))
-          .select(col(idCol), col(vecCol))
-          .localCheckpoint(eager = false) // walk/build + vec sidecar
-        val delIds = deleteCol.map(dc => batch.filter(col(dc))
-            .select(col(idCol).as("id")).distinct()
-            .localCheckpoint(eager = false))
-          .filter(d => !d.isEmpty)
-        val addVecs = GraphAnn.vecTable(adds, idCol, vecCol)
-        prev match {
-          case None =>
-            // bootstrap: the first batch IS the corpus — the build job
-            GraphAnn.buildGraph(adds, m, lshBits, probes = probes,
-                nBuckets = nBuckets, idCol = idCol, vecCol = vecCol)
-              .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/edges")
-            addVecs.write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/vecs")
-            delIds.foreach(_.write.mode("overwrite")
-              .parquet(s"$dir/seg/v=$batchId/del"))
-            SegmentedState.writeManifest(spark, dir, batchId,
-              Manifest(None, Seq(batchId),
-                if (delIds.isDefined) Set(batchId) else Set.empty))
-          case Some(p) =>
-            val prevM = SegmentedState.readManifest(spark, dir, p)
-            val view = SegmentedState.rowView(spark, dir, prevM, "edges",
-                "src", baseDrop = Nil)
-              .localCheckpoint(eager = false) // remove + insert consumers
-            val vecsView = SegmentedState.rowView(spark, dir, prevM, "vecs",
-                "id", baseDrop = Nil)
-              .localCheckpoint(eager = false) // repair vecs + re-writes
-            // deletes repair first; adds walk the repaired graph
-            val (afterRm, gone) = delIds match {
-              case Some(d) =>
-                val (delta, g0) = GraphAnn.removeDelta(view, d, vecsView,
-                  m, nBuckets)
-                (view.join(broadcast(g0), Seq("src"), "left_anti")
-                  .unionByName(delta), g0)
-              case None =>
-                (view, view.select(col("src")).limit(0))
-            }
-            val (delta, superseded) =
-              if (adds.isEmpty)
-                (afterRm.limit(0),
-                  afterRm.select(col("src")).limit(0))
-              else if (afterRm.isEmpty)
-                // the graph emptied out (total erasure) — re-bootstrap
-                // from the batch, else the new nodes would join edgeless
-                (GraphAnn.buildGraph(adds, m, lshBits, probes = probes,
-                   nBuckets = nBuckets, idCol = idCol, vecCol = vecCol),
-                 adds.select(col(idCol).as("src")).distinct())
-              else GraphAnn.insertDelta(afterRm, adds, m, ef, iters,
-                entries, nBuckets, idCol, vecCol)
-            val changed = gone.unionByName(superseded).distinct()
-              .localCheckpoint(eager = false) // edge + vec + del writers
-            // the batch's post-change edge rows: every changed src's
-            // final edge set (erased srcs have none — tombstone only)
-            afterRm.join(broadcast(superseded), Seq("src"), "left_anti")
-              .unionByName(delta)
-              .join(broadcast(changed), Seq("src"), "left_semi")
-              .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/edges")
-            // vec sidecar: adds' own vectors ∪ superseded live srcs'
-            // (re-written at this version — the shared del list kills
-            // their older rows in BOTH subviews); erased ids die
-            val keepIds = changed.withColumnRenamed("src", "id")
-              .join(broadcast(delIds.getOrElse(
-                  changed.select(col("src").as("id")).limit(0))),
-                Seq("id"), "left_anti")
-            vecsView.join(broadcast(keepIds), Seq("id"), "left_semi")
-              .join(broadcast(addVecs.select(col("id"))), Seq("id"),
-                "left_anti") // adds' own rows win (erase → re-ingest)
-              .unionByName(addVecs)
-              .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/vecs")
-            // one shared tombstone list: superseded srcs + erased ids
-            changed.withColumnRenamed("src", "id")
-              .unionByName(delIds.getOrElse(
-                changed.select(col("src").as("id")).limit(0)))
-              .distinct()
-              .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/del")
-            val appended = Manifest(prevM.base, prevM.segments :+ batchId,
-              prevM.dels + batchId)
-            val committed =
-              if (appended.segments.size < maxSegments) appended
-              else { // major compaction: resolve kills, scrub, partition
-                compactTo(spark, dir, appended, batchId)
-                Manifest(Some(batchId), Nil, Set.empty)
-              }
-            SegmentedState.writeManifest(spark, dir, batchId, committed)
-        }
-        StatePointer.advance(spark, dir, batchId)
+    StatePointer.applyOnce(spark, dir, batchId) { prev =>
+      val (adds0, dels) = SegmentedState.splitChange(batch, deleteCol)(
+        SegmentedState.tombIds(idCol).andThen(_.distinct()))
+      val adds = adds0.select(col(idCol), col(vecCol))
+        .localCheckpoint(eager = false) // walk/build + vec sidecar
+      val delIds = dels.filter(d => !d.isEmpty)
+      val addVecs = GraphAnn.vecTable(adds, idCol, vecCol)
+      prev match {
+        case None =>
+          // bootstrap: the first batch IS the corpus — the build job
+          GraphAnn.buildGraph(adds, m, lshBits, probes = probes,
+              nBuckets = nBuckets, idCol = idCol, vecCol = vecCol)
+            .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/edges")
+          addVecs.write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/vecs")
+          delIds.foreach(_.write.mode("overwrite")
+            .parquet(s"$dir/seg/v=$batchId/del"))
+        case Some(p) =>
+          val prevM = SegmentedState.readManifest(spark, dir, p)
+          val view = SegmentedState.rowView(spark, dir, prevM, "edges",
+              "src", baseDrop = Nil)
+            .localCheckpoint(eager = false) // remove + insert consumers
+          val vecsView = SegmentedState.rowView(spark, dir, prevM, "vecs",
+              "id", baseDrop = Nil)
+            .localCheckpoint(eager = false) // repair vecs + re-writes
+          // deletes repair first; adds walk the repaired graph
+          val (afterRm, gone) = delIds match {
+            case Some(d) =>
+              val (delta, g0) = GraphAnn.removeDelta(view, d, vecsView,
+                m, nBuckets)
+              (view.join(broadcast(g0), Seq("src"), "left_anti")
+                .unionByName(delta), g0)
+            case None =>
+              (view, view.select(col("src")).limit(0))
+          }
+          val (delta, superseded) =
+            if (adds.isEmpty)
+              (afterRm.limit(0),
+                afterRm.select(col("src")).limit(0))
+            else if (afterRm.isEmpty)
+              // the graph emptied out (total erasure) — re-bootstrap
+              // from the batch, else the new nodes would join edgeless
+              (GraphAnn.buildGraph(adds, m, lshBits, probes = probes,
+                 nBuckets = nBuckets, idCol = idCol, vecCol = vecCol),
+               adds.select(col(idCol).as("src")).distinct())
+            else GraphAnn.insertDelta(afterRm, adds, m, ef, iters,
+              entries, nBuckets, idCol, vecCol)
+          val changed = gone.unionByName(superseded).distinct()
+            .localCheckpoint(eager = false) // edge + vec + del writers
+          // the batch's post-change edge rows: every changed src's
+          // final edge set (erased srcs have none — tombstone only)
+          afterRm.join(broadcast(superseded), Seq("src"), "left_anti")
+            .unionByName(delta)
+            .join(broadcast(changed), Seq("src"), "left_semi")
+            .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/edges")
+          // vec sidecar: adds' own vectors ∪ superseded live srcs'
+          // (re-written at this version — the shared del list kills
+          // their older rows in BOTH subviews); erased ids die
+          val keepIds = changed.withColumnRenamed("src", "id")
+            .join(broadcast(delIds.getOrElse(
+                changed.select(col("src").as("id")).limit(0))),
+              Seq("id"), "left_anti")
+          vecsView.join(broadcast(keepIds), Seq("id"), "left_semi")
+            .join(broadcast(addVecs.select(col("id"))), Seq("id"),
+              "left_anti") // adds' own rows win (erase → re-ingest)
+            .unionByName(addVecs)
+            .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/vecs")
+          // one shared tombstone list: superseded srcs + erased ids
+          changed.withColumnRenamed("src", "id")
+            .unionByName(delIds.getOrElse(
+              changed.select(col("src").as("id")).limit(0)))
+            .distinct()
+            .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/del")
+      }
+      // every later segment carries a del side (its superseded srcs);
+      // no minor fold — at `maxSegments` a major resolves kills,
+      // scrubs and partitions. The bootstrap batch never compacts.
+      SegmentedState.appendSegment(spark, dir, batchId, prev,
+          if (prev.isEmpty) Int.MaxValue else maxSegments,
+          hasDel = prev.isDefined || delIds.isDefined)(_ => None)(
+        compactTo(spark, dir))
     }
   }
 
-  private def compactTo(spark: SparkSession, dir: String, m: Manifest,
+  private def compactTo(spark: SparkSession, dir: String)(m: Manifest,
       v: Long): Unit = {
     // `b` doubles as the hive-partition column — the serving walk's
     // pruning unit, already part of the edge schema
-    SegmentedState.writePartitioned(
-      SegmentedState.rowView(spark, dir, m, "edges", "src", baseDrop = Nil),
-      s"$dir/base/v=$v/edges", Seq("b"))
+    SegmentedState.compactRows(spark, dir, "edges", "src", "b", None)(m, v)
     SegmentedState.rowView(spark, dir, m, "vecs", "id", baseDrop = Nil)
       .write.mode("overwrite").parquet(s"$dir/base/v=$v/vecs")
   }
@@ -192,14 +175,7 @@ object StreamingGraphAnn {
   /** Out-of-band compaction at the current version (no-op without
     * segments); content-identical, manifest rewrite atomic. */
   def compact(spark: SparkSession, dir: String): Unit =
-    latestVersion(spark, dir).foreach { v =>
-      val m = SegmentedState.readManifest(spark, dir, v)
-      if (m.segments.nonEmpty) {
-        compactTo(spark, dir, m, v)
-        SegmentedState.writeManifest(spark, dir, v,
-          Manifest(Some(v), Nil, Set.empty))
-      }
-    }
+    SegmentedState.compact(spark, dir)(compactTo(spark, dir))
 
   /** Reclaim superseded segments/bases/manifests; `retain` > 1 =
     * concurrent-reader grace window ([[SegmentedState.vacuum]]). */
@@ -247,13 +223,8 @@ object StreamingGraphAnn {
       vacuumEvery: Int = 0,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
       idCol: String = "vec_id", vecCol: String = "embedding"): DataStreamWriter[org.apache.spark.sql.Row] =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyBatch(df, dir, batchId, m, lshBits, probes, ef, iters,
-          entries, nBuckets, deleteCol, maxSegments, idCol, vecCol)
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          vacuum(df.sparkSession, dir)
-      }
+    StatePointer.foldStream(emb, checkpointDir, trigger, vacuumEvery,
+        vacuum(_, dir))(
+      applyBatch(_, dir, _, m, lshBits, probes, ef, iters, entries, nBuckets,
+        deleteCol, maxSegments, idCol, vecCol))
 }

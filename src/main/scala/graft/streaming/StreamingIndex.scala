@@ -101,13 +101,6 @@ object StreamingIndex {
   def latestVersion(spark: SparkSession, dir: String): Option[Long] =
     StatePointer.read(spark, dir)
 
-  private def readManifest(spark: SparkSession, dir: String, v: Long): Manifest =
-    SegmentedState.readManifest(spark, dir, v)
-
-  private def writeManifest(spark: SparkSession, dir: String, v: Long,
-      m: Manifest): Unit =
-    SegmentedState.writeManifest(spark, dir, v, m)
-
   /** Assemble the merge-on-read plan for a manifest: base + live segments
     * folded in BATCH ORDER, split at tombstone boundaries — a del segment
     * subtracts from exactly the state that preceded it (base + earlier
@@ -187,11 +180,8 @@ object StreamingIndex {
     * live segments — compaction keeps this bounded. */
   def readIndex(spark: SparkSession, dir: String,
       gramCol: String = "gram"): DataFrame =
-    latestVersion(spark, dir) match {
-      case Some(v) =>
-        mergedView(spark, dir, readManifest(spark, dir, v), None, gramCol)
-      case None => throw new IllegalStateException(s"no index at $dir yet")
-    }
+    mergedView(spark, dir, SegmentedState.current(spark, dir, "index"), None,
+      gramCol)
 
   /** Gram-bucket-pruned serving read for a LITERAL gram panel (phrase
     * probes, literal BM25 panels): the merge-on-read view with every part
@@ -206,20 +196,13 @@ object StreamingIndex {
     * path: a phrase probe touches its grams' buckets, never the index. */
   def readIndexPruned(spark: SparkSession, dir: String,
       grams: Seq[String], gramCol: String = "gram"): DataFrame =
-    latestVersion(spark, dir) match {
-      case Some(v) =>
-        mergedView(spark, dir, readManifest(spark, dir, v), Some(grams),
-          gramCol)
-      case None => throw new IllegalStateException(s"no index at $dir yet")
-    }
+    mergedView(spark, dir, SegmentedState.current(spark, dir, "index"),
+      Some(grams), gramCol)
 
   /** The current stats sidecar (n_docs, sum_dl) — 1 row, folded and
     * rewritten per batch (O(1) state, not worth segmenting). */
   def readStats(spark: SparkSession, dir: String): DataFrame =
-    latestVersion(spark, dir) match {
-      case Some(v) => spark.read.parquet(s"$dir/stats/v=$v")
-      case None => throw new IllegalStateException(s"no stats at $dir yet")
-    }
+    StatePointer.versioned(spark, dir, "stats", "stats")
 
   /** Consumer view: rails applied over the LIVE doc count, the
     * [[Search.applyRails]] read-time contract (minDf, maxDfFrac·n). */
@@ -271,97 +254,74 @@ object StreamingIndex {
       build: DataFrame => DataFrame = Search.invertedIndexRaw(_)): Unit = {
     require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
     val spark = batch.sparkSession
-    latestVersion(spark, dir) match {
-      case Some(v) if v >= batchId => // applied or pointer mismatch
-        StatePointer.replayCheck(spark, dir, batchId)
-      case prev =>
-        // lazy checkpoints: each side has 2-3 consumers below (segment
-        // write, stats fold, emptiness probe) — don't rescan the batch
-        val adds = deleteCol.fold(batch)(dc => batch.filter(!col(dc)).drop(dc))
-          .localCheckpoint(eager = false)
-        val dels = deleteCol.map(dc => batch.filter(col(dc)).drop(dc)
-          .localCheckpoint(eager = false))
-        // ---- segment write: bytes ∝ batch, never ∝ corpus ----
-        build(adds)
-          .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/idx")
-        val hasDel = dels.exists(d => !d.isEmpty)
-        if (hasDel)
-          build(dels.get)
-            .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/del")
-        // ---- stats fold: 1-row sidecar, O(1) per batch ----
-        val batchStats = Search.corpusStats(adds)
-        val grown = prev match {
-          case Some(v) => Search.statsMerge(
-            spark.read.parquet(s"$dir/stats/v=$v"), batchStats)
-          case None => batchStats
-        }
-        val stats = if (hasDel)
-          Search.statsDelete(grown, Search.corpusStats(dels.get)) else grown
-        stats.write.mode("overwrite").parquet(s"$dir/stats/v=$batchId")
-        // ---- manifest + (amortized) compaction ----
-        val prevM = prev.map(readManifest(spark, dir, _))
-          .getOrElse(Manifest(None, Nil, Set.empty))
-        // pure-tombstone batches (del side present, add side empty) are
-        // what a trailing del-run minor fold may later collapse — record
-        // them in the manifest (invariant: pure ⊆ dels). Checked only on
-        // del-carrying batches, so the common all-adds path pays nothing.
-        val pureDel = hasDel && adds.isEmpty
-        val appended = Manifest(prevM.base, prevM.segments :+ batchId,
-          if (hasDel) prevM.dels + batchId else prevM.dels,
-          prevM.buckets,
-          if (pureDel) prevM.pure + batchId else prevM.pure)
-        def major(): Manifest = {
-          SegmentedState.writePartitioned(
-            mergedView(spark, dir, appended, gramCol = gramCol)
-              .withColumn("b", pmod(xxhash64(col(gramCol)), lit(nBuckets.toLong))),
-            s"$dir/base/v=$batchId", Seq("b"))
-          // buckets recorded so pruned probes hash with the WRITER's
-          // modulus (readIndexPruned), never a configured one
-          Manifest(Some(batchId), Nil, Set.empty, Some(nBuckets))
-        }
-        // per-gram re-aggregation of a segment-run union — the minor-fold
-        // kernel (direct re-agg, NOT indexMerge: the run includes the
-        // previously-minored segment, whose gram list is too large to
-        // broadcast). Folds add runs and pure-del runs alike: doc sets
-        // are disjoint within either run kind, so counts add exactly.
-        def foldRun(run: Seq[Long], sub: String): Unit =
-          SegmentedState.swapIn(run
-            .map(v => spark.read.parquet(s"$dir/seg/v=$v/$sub"))
-            .reduce(_ unionByName _)
-            .groupBy(col(gramCol))
-            .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"),
-              sort_array(flatten(collect_list(col("pl")))).as("pl")),
-            dir, batchId, sub)
-        val committed =
-          if (appended.segments.size < maxSegments) appended
-          else SegmentedState.minorPlan(spark, dir, appended, majorRatio) match {
-            case Some(tailRun) =>
-              // MINOR: fold the tail del-less run into this batch's
-              // segment — folded-run members (except this batch) become
-              // debris, unreferenced by the new manifest, vacuumable
-              foldRun(tailRun, "idx")
-              SegmentedState.afterMinor(appended, tailRun, batchId)
-            case None =>
-              SegmentedState.delRunPlan(spark, dir, appended, majorRatio,
-                  batchId) match {
-                case Some(delRun) =>
-                  // TOMBSTONE-RUN MINOR (the erasure-sweep answer): a
-                  // trailing run of PURE-del segments folds into ONE del
-                  // segment at this batch's version. Legal because no
-                  // adds interleave inside the run — the union of the
-                  // tombstones subtracts from exactly the state that
-                  // preceded the run, preserving batch order — so an
-                  // erasure sweep costs ∝ accumulated tombstones per
-                  // trigger, never an O(corpus) major.
-                  foldRun(delRun, "del")
-                  SegmentedState.afterDelRun(appended, delRun, batchId)
-                case None => major()
-              }
-          }
-        writeManifest(spark, dir, batchId, committed)
-        StatePointer.advance(spark, dir, batchId)
+    StatePointer.applyOnce(spark, dir, batchId) { prev =>
+      // lazy checkpoints: each side has 2-3 consumers below (segment
+      // write, stats fold, emptiness probe) — don't rescan the batch
+      val (adds0, dels) = SegmentedState.splitChange(batch, deleteCol)(identity)
+      val adds = adds0.localCheckpoint(eager = false)
+      // ---- segment write: bytes ∝ batch, never ∝ corpus ----
+      build(adds)
+        .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/idx")
+      val hasDel = SegmentedState.writeDels(dir, batchId, dels)(build)
+      // ---- stats fold: 1-row sidecar, O(1) per batch ----
+      val batchStats = Search.corpusStats(adds)
+      val grown = prev match {
+        case Some(v) => Search.statsMerge(
+          spark.read.parquet(s"$dir/stats/v=$v"), batchStats)
+        case None => batchStats
+      }
+      val stats = if (hasDel)
+        Search.statsDelete(grown, Search.corpusStats(dels.get)) else grown
+      stats.write.mode("overwrite").parquet(s"$dir/stats/v=$batchId")
+      // per-gram re-aggregation of a segment-run union — the minor-fold
+      // kernel (direct re-agg, NOT indexMerge: the run includes the
+      // previously-minored segment, whose gram list is too large to
+      // broadcast). Folds add runs and pure-del runs alike: doc sets
+      // are disjoint within either run kind, so counts add exactly.
+      def foldRun(sub: String)(run: Seq[Long]): DataFrame =
+        SegmentedState.concat(spark, dir, sub)(run)
+          .groupBy(col(gramCol))
+          .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"),
+            sort_array(flatten(collect_list(col("pl")))).as("pl"))
+      // ---- manifest + (amortized) compaction ----
+      // pure-tombstone batches (del side present, add side empty) are
+      // what a trailing del-run minor fold may later collapse — record
+      // them in the manifest (invariant: pure ⊆ dels). Checked only on
+      // del-carrying batches, so the common all-adds path pays nothing.
+      // Buckets are recorded at a major so pruned probes hash with the
+      // WRITER's modulus (readIndexPruned), never a configured one.
+      SegmentedState.appendSegment(spark, dir, batchId, prev, maxSegments,
+          hasDel, pureDel = hasDel && adds.isEmpty, buckets = Some(nBuckets)) {
+        appended =>
+          // MINOR: fold the tail del-less run into this batch's segment
+          // — folded-run members (except this batch) become debris,
+          // unreferenced by the new manifest, vacuumable
+          SegmentedState.tailMinor(spark, dir, batchId, majorRatio)(
+              "idx" -> foldRun("idx"))(appended)
+            .orElse(SegmentedState.delRunPlan(spark, dir, appended,
+                majorRatio, batchId).map { delRun =>
+              // TOMBSTONE-RUN MINOR (the erasure-sweep answer): a
+              // trailing run of PURE-del segments folds into ONE del
+              // segment at this batch's version. Legal because no adds
+              // interleave inside the run — the union of the tombstones
+              // subtracts from exactly the state that preceded the run,
+              // preserving batch order — so an erasure sweep costs ∝
+              // accumulated tombstones per trigger, never an O(corpus)
+              // major.
+              SegmentedState.swapIn(foldRun("del")(delRun), dir, batchId,
+                "del")
+              SegmentedState.afterDelRun(appended, delRun, batchId)
+            })
+      }(compactTo(spark, dir, gramCol, nBuckets))
     }
   }
+
+  private def compactTo(spark: SparkSession, dir: String, gramCol: String,
+      nBuckets: Int)(m: Manifest, v: Long): Unit =
+    SegmentedState.writePartitioned(
+      mergedView(spark, dir, m, gramCol = gramCol)
+        .withColumn("b", pmod(xxhash64(col(gramCol)), lit(nBuckets.toLong))),
+      s"$dir/base/v=$v", Seq("b"))
 
   /** Out-of-band compaction: fold the live segments (and their
     * tombstones) into a new bucket-partitioned base at the CURRENT
@@ -371,17 +331,8 @@ object StreamingIndex {
     * layout, never a mix. */
   def compact(spark: SparkSession, dir: String,
       nBuckets: Int = DefaultBuckets, gramCol: String = "gram"): Unit =
-    latestVersion(spark, dir).foreach { v =>
-      val m = readManifest(spark, dir, v)
-      if (m.segments.nonEmpty) {
-        SegmentedState.writePartitioned(
-          mergedView(spark, dir, m, gramCol = gramCol)
-            .withColumn("b", pmod(xxhash64(col(gramCol)), lit(nBuckets.toLong))),
-          s"$dir/base/v=$v", Seq("b"))
-        writeManifest(spark, dir, v,
-          Manifest(Some(v), Nil, Set.empty, Some(nBuckets)))
-      }
-    }
+    SegmentedState.compact(spark, dir, Some(nBuckets))(
+      compactTo(spark, dir, gramCol, nBuckets))
 
   /** Delete every state dir the `retain` most recent manifests no
     * longer reference (superseded bases, compacted-away segments, stale
@@ -402,13 +353,7 @@ object StreamingIndex {
       nBuckets: Int = DefaultBuckets,
       vacuumEvery: Int = 0,
       majorRatio: Double = DefaultMajorRatio): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyBatch(df, dir, batchId, deleteCol, maxSegments, nBuckets,
-          majorRatio)
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          vacuum(df.sparkSession, dir)
-      }
+    StatePointer.foldStream(docs, checkpointDir, trigger, vacuumEvery,
+        vacuum(_, dir))(
+      applyBatch(_, dir, _, deleteCol, maxSegments, nBuckets, majorRatio))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.llm.Similarity
@@ -36,23 +35,15 @@ import graft.llm.Similarity
   * `maxSegments` the view compacts into `base/v=<id>/ivf`
   * HIVE-PARTITIONED BY `cell`: the same layout `q_knn_ivf_indexed`
   * serves from, so a pruned probe (nprobe < nCells) scans only its
-  * probed cells' directories. [[vacuum]] reclaims superseded state;
-  * replays are pointer-skipped before any state dir is touched. */
+  * probed cells' directories — the [[SegmentedState.applyRows]] fold.
+  * [[vacuum]] reclaims superseded state; replays are pointer-skipped
+  * before any state dir is touched. */
 object StreamingIvf {
 
   val DefaultMaxSegments = 8
 
-  import SegmentedState.Manifest
-
   def latestVersion(spark: SparkSession, dir: String): Option[Long] =
     StatePointer.read(spark, dir)
-
-  private def manifest(spark: SparkSession, dir: String): Manifest =
-    latestVersion(spark, dir) match {
-      case Some(v) => SegmentedState.readManifest(spark, dir, v)
-      case None =>
-        throw new IllegalStateException(s"no IVF state at $dir yet")
-    }
 
   /** The persisted codebook (cell, center) — written once at the first
     * batch, shared by every assignment and probe thereafter. */
@@ -63,7 +54,8 @@ object StreamingIvf {
     * [[Similarity.ivfAssignments]]' contract over the live corpus. */
   def readIndex(spark: SparkSession, dir: String,
       idCol: String = "vec_id"): DataFrame =
-    SegmentedState.rowView(spark, dir, manifest(spark, dir), "ivf", idCol,
+    SegmentedState.rowView(spark, dir,
+      SegmentedState.current(spark, dir, "IVF state"), "ivf", idCol,
       baseDrop = Nil)
 
   /** Probe the maintained index — [[Similarity.ivfKnnFromIndex]] over the
@@ -86,74 +78,25 @@ object StreamingIvf {
       deleteCol: Option[String] = None,
       maxSegments: Int = DefaultMaxSegments,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      majorRatio: Double = StreamingIndex.DefaultMajorRatio): Unit = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
-    val spark = batch.sparkSession
-    latestVersion(spark, dir) match {
-      case Some(v) if v >= batchId => // applied or pointer mismatch
-        StatePointer.replayCheck(spark, dir, batchId)
-      case prev =>
-        val fs = SegmentedState.fs(spark, dir)
-        if (!fs.exists(new Path(s"$dir/centers")))
-          centers.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/centers")
-        val cdf = readCenters(spark, dir)
-        val adds = deleteCol.fold(batch)(dc => batch.filter(!col(dc)).drop(dc))
-        val delIds = deleteCol.map(dc => batch.filter(col(dc))
-          .select(col(idCol).as("id")).localCheckpoint(eager = false))
-        // ---- segment write: scan-side assignment, bytes ∝ batch ----
-        Similarity.ivfAssignments(adds, cdf, idCol, vecCol)
-          .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/ivf")
-        val hasDel = delIds.exists(d => !d.isEmpty)
-        if (hasDel)
-          delIds.get.write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/del")
-        // ---- manifest + (amortized) compaction ----
-        val prevM = prev.map(SegmentedState.readManifest(spark, dir, _))
-          .getOrElse(Manifest(None, Nil, Set.empty))
-        val appended = Manifest(prevM.base, prevM.segments :+ batchId,
-          if (hasDel) prevM.dels + batchId else prevM.dels)
-        val committed =
-          if (appended.segments.size < maxSegments) appended
-          else SegmentedState.minorPlan(spark, dir, appended, majorRatio) match {
-            case None => compactTo(spark, dir, appended, batchId, idCol)
-              Manifest(Some(batchId), Nil, Set.empty)
-            case Some(tailRun) =>
-              // MINOR: per-row artifact — the fold is a pure concat of
-              // the tail run (row versions bump to batchId, which stays
-              // ordered against every tombstone: earlier dels still
-              // predate the run, future dels postdate it)
-              SegmentedState.swapIn(tailRun
-                .map(v => spark.read.parquet(s"$dir/seg/v=$v/ivf"))
-                .reduce(_ unionByName _),
-                dir, batchId, "ivf")
-              SegmentedState.afterMinor(appended, tailRun, batchId)
-          }
-        SegmentedState.writeManifest(spark, dir, batchId, committed)
-        StatePointer.advance(spark, dir, batchId)
-    }
-  }
-
-  private def compactTo(spark: SparkSession, dir: String, m: Manifest,
-      v: Long, idCol: String): Unit =
+      majorRatio: Double = StreamingIndex.DefaultMajorRatio): Unit =
     // `cell` doubles as the hive-partition column: the probe's pruning
     // unit, and already part of the artifact schema (no extra bucket col
     // to drop at read)
-    SegmentedState.writePartitioned(
-      SegmentedState.rowView(spark, dir, m, "ivf", idCol, baseDrop = Nil),
-      s"$dir/base/v=$v/ivf", Seq("cell"))
+    SegmentedState.applyRows(batch, dir, batchId, deleteCol, idCol, "ivf",
+        maxSegments, majorRatio, "cell", None) { adds =>
+      val spark = batch.sparkSession
+      if (!SegmentedState.fs(spark, dir).exists(new Path(s"$dir/centers")))
+        centers.coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
+      // scan-side assignment, bytes ∝ batch
+      Similarity.ivfAssignments(adds, readCenters(spark, dir), idCol, vecCol)
+    }
 
   /** Out-of-band compaction at the current version (no-op without
     * segments); content-identical, manifest rewrite atomic. */
   def compact(spark: SparkSession, dir: String,
       idCol: String = "vec_id"): Unit =
-    latestVersion(spark, dir).foreach { v =>
-      val m = SegmentedState.readManifest(spark, dir, v)
-      if (m.segments.nonEmpty) {
-        compactTo(spark, dir, m, v, idCol)
-        SegmentedState.writeManifest(spark, dir, v,
-          Manifest(Some(v), Nil, Set.empty))
-      }
-    }
+    SegmentedState.compact(spark, dir)(SegmentedState.compactRows(spark,
+      dir, "ivf", idCol, "cell", None))
 
   /** Reclaim superseded segments/bases/manifests; `retain` > 1 =
     * concurrent-reader grace window ([[SegmentedState.vacuum]]). The
@@ -171,13 +114,8 @@ object StreamingIvf {
       vacuumEvery: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding",
       majorRatio: Double = StreamingIndex.DefaultMajorRatio): DataStreamWriter[org.apache.spark.sql.Row] =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyBatch(df, dir, batchId, centers, deleteCol, maxSegments,
-          idCol, vecCol, majorRatio)
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          vacuum(df.sparkSession, dir)
-      }
+    StatePointer.foldStream(emb, checkpointDir, trigger, vacuumEvery,
+        vacuum(_, dir))(
+      applyBatch(_, dir, _, centers, deleteCol, maxSegments, idCol, vecCol,
+        majorRatio))
 }

@@ -24,8 +24,9 @@ import graft.llm.Multimodal
   * and erase → re-ingest churn is correct by the same rule. At
   * `maxSegments` the view compacts into `base/v=<id>/feat` hive-bucketed
   * by a media-id hash (clustered write — one file per bucket); minor
-  * folds concatenate the del-less tail run without touching the base.
-  * Replays are pointer-skipped before any state dir is touched.
+  * folds concatenate the del-less tail run without touching the base —
+  * the [[SegmentedState.applyRows]] fold. Replays are pointer-skipped
+  * before any state dir is touched.
   *
   * Serving: [[nearDups]] runs the band → cap → verify tail
   * ([[Multimodal.dedupNearFromFeatures]]) over the merge-on-read view —
@@ -38,22 +39,14 @@ object StreamingMedia {
   val DefaultMaxSegments = 8
   val DefaultBuckets = 32
 
-  import SegmentedState.Manifest
-
   def latestVersion(spark: SparkSession, dir: String): Option[Long] =
     StatePointer.read(spark, dir)
 
-  private def manifest(spark: SparkSession, dir: String): Manifest =
-    latestVersion(spark, dir) match {
-      case Some(v) => SegmentedState.readManifest(spark, dir, v)
-      case None =>
-        throw new IllegalStateException(s"no media state at $dir yet")
-    }
-
   /** The maintained (media_id, features) view over the live corpus. */
   def readFeatures(spark: SparkSession, dir: String): DataFrame =
-    SegmentedState.rowView(spark, dir, manifest(spark, dir), "feat",
-      "media_id", baseDrop = Seq("b"))
+    SegmentedState.rowView(spark, dir,
+      SegmentedState.current(spark, dir, "media state"), "feat", "media_id",
+      baseDrop = Seq("b"))
 
   /** Perceptual near-dup pairs over the maintained state — zero media
     * access ([[Multimodal.dedupNearFromFeatures]]). */
@@ -81,68 +74,19 @@ object StreamingMedia {
       maxSegments: Int = DefaultMaxSegments,
       nBuckets: Int = DefaultBuckets, dim: Int = 16,
       codec: Multimodal.MediaCodec = Multimodal.FakeCodec,
-      majorRatio: Double = StreamingIndex.DefaultMajorRatio): Unit = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
-    val spark = batch.sparkSession
-    latestVersion(spark, dir) match {
-      case Some(v) if v >= batchId => // applied or pointer mismatch
-        StatePointer.replayCheck(spark, dir, batchId)
-      case prev =>
-        val adds = deleteCol.fold(batch)(dc => batch.filter(!col(dc)).drop(dc))
-        val delIds = deleteCol.map(dc => batch.filter(col(dc))
-          .select(col("media_id").as("id")).localCheckpoint(eager = false))
-        // ---- segment write: the batch is DECODED here, once ----
-        Multimodal.extractFeatures(adds, dim, codec)
-          .select(col("media_id"), col("features"))
-          .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/feat")
-        val hasDel = delIds.exists(d => !d.isEmpty)
-        if (hasDel)
-          delIds.get.write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/del")
-        // ---- manifest + (amortized) compaction ----
-        val prevM = prev.map(SegmentedState.readManifest(spark, dir, _))
-          .getOrElse(Manifest(None, Nil, Set.empty))
-        val appended = Manifest(prevM.base, prevM.segments :+ batchId,
-          if (hasDel) prevM.dels + batchId else prevM.dels)
-        val committed =
-          if (appended.segments.size < maxSegments) appended
-          else SegmentedState.minorPlan(spark, dir, appended, majorRatio) match {
-            case None => compactTo(spark, dir, appended, batchId, nBuckets)
-              Manifest(Some(batchId), Nil, Set.empty)
-            case Some(tailRun) =>
-              // MINOR: per-row artifact — pure concat of the del-less
-              // tail run; versions bump to batchId, which stays ordered
-              // against every tombstone
-              SegmentedState.swapIn(tailRun
-                .map(v => spark.read.parquet(s"$dir/seg/v=$v/feat"))
-                .reduce(_ unionByName _),
-                dir, batchId, "feat")
-              SegmentedState.afterMinor(appended, tailRun, batchId)
-          }
-        SegmentedState.writeManifest(spark, dir, batchId, committed)
-        StatePointer.advance(spark, dir, batchId)
-    }
-  }
-
-  private def compactTo(spark: SparkSession, dir: String, m: Manifest,
-      v: Long, nBuckets: Int): Unit =
-    SegmentedState.writePartitioned(
-      SegmentedState.rowView(spark, dir, m, "feat", "media_id",
-          baseDrop = Seq("b"))
-        .withColumn("b", pmod(xxhash64(col("media_id")), lit(nBuckets.toLong))),
-      s"$dir/base/v=$v/feat", Seq("b"))
+      majorRatio: Double = StreamingIndex.DefaultMajorRatio): Unit =
+    // the batch is DECODED here, once
+    SegmentedState.applyRows(batch, dir, batchId, deleteCol, "media_id",
+      "feat", maxSegments, majorRatio, "b", Some(nBuckets))(
+      Multimodal.extractFeatures(_, dim, codec)
+        .select(col("media_id"), col("features")))
 
   /** Out-of-band compaction at the current version (no-op without
     * segments); content-identical, manifest rewrite atomic. */
   def compact(spark: SparkSession, dir: String,
       nBuckets: Int = DefaultBuckets): Unit =
-    latestVersion(spark, dir).foreach { v =>
-      val m = SegmentedState.readManifest(spark, dir, v)
-      if (m.segments.nonEmpty) {
-        compactTo(spark, dir, m, v, nBuckets)
-        SegmentedState.writeManifest(spark, dir, v,
-          Manifest(Some(v), Nil, Set.empty))
-      }
-    }
+    SegmentedState.compact(spark, dir)(SegmentedState.compactRows(spark,
+      dir, "feat", "media_id", "b", Some(nBuckets)))
 
   /** Reclaim superseded segments/bases/manifests; `retain` > 1 =
     * concurrent-reader grace window ([[SegmentedState.vacuum]]). */
@@ -157,13 +101,8 @@ object StreamingMedia {
       nBuckets: Int = DefaultBuckets,
       vacuumEvery: Int = 0,
       majorRatio: Double = StreamingIndex.DefaultMajorRatio): DataStreamWriter[org.apache.spark.sql.Row] =
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyBatch(df, dir, batchId, deleteCol, maxSegments, nBuckets,
-          majorRatio = majorRatio)
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          vacuum(df.sparkSession, dir)
-      }
+    StatePointer.foldStream(media, checkpointDir, trigger, vacuumEvery,
+        vacuum(_, dir))(
+      applyBatch(_, dir, _, deleteCol, maxSegments, nBuckets,
+        majorRatio = majorRatio))
 }

@@ -73,7 +73,9 @@ object StreamingPipeline {
     * The parse stage carries `observe("parse", ...)` counters — the
     * engine form of the reference's per-record error logs
     * (`amplitude.validation.error`, `utils.js:66`; silent O6 drops):
-    * input/invalid/repaired counts surface per micro-batch through
+    * input/invalid/repaired counts and the min/max publish time over
+    * every pulled message (`synchronous-pull.js:59-63`, before any
+    * filter or dedup) surface per micro-batch through
     * `StreamingQueryProgress.observedMetrics("parse")`. Invalid messages
     * are dropped after those counters and before the dedup: they emit
     * nothing after [[EventEtl.flatten]], and their shared null insert_id
@@ -94,20 +96,19 @@ object StreamingPipeline {
     * at the checkpoint's first start ([[graft.Main.start]] sizes it to the
     * task slots). */
   def transform(raw: DataFrame, hmacKey: String,
-      watermarkDelay: String = "1 hour", dedup: Boolean = true): DataFrame = {
-    val parsed = EventEtl.parsed(raw, hmacKey)
+      watermarkDelay: String = "1 hour"): DataFrame = {
+    val deduped = EventEtl.parsed(raw, hmacKey)
       .observe("parse",
         count(lit(1)).as("input_count"),
         sum(when(!col("valid"), 1L).otherwise(0L)).as("invalid_count"),
         sum(when(col("valid") && col("session_repaired"), 1L).otherwise(0L))
-          .as("repaired_count"))
+          .as("repaired_count"),
+        min(col("publish_time")).as("min_publish_time"),
+        max(col("publish_time")).as("max_publish_time"))
       .filter(col("valid"))
       .withColumn("publish_ts", to_timestamp(col("publish_time")))
-    val deduped =
-      if (dedup)
-        parsed.withWatermark("publish_ts", watermarkDelay)
-          .dropDuplicatesWithinWatermark("insert_id")
-      else parsed
+      .withWatermark("publish_ts", watermarkDelay)
+      .dropDuplicatesWithinWatermark("insert_id")
     EventEtl.flatten(deduped.drop("publish_ts"))
   }
 
@@ -116,11 +117,7 @@ object StreamingPipeline {
   def writer(flat: DataFrame, cfg: AmplitudeSink.Config,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val observed = flat.observe("batch",
-      count(lit(1)).as("output_count"),
-      min(col("publish_time")).as("min_publish_time"),
-      max(col("publish_time")).as("max_publish_time"))
-    observed.writeStream
+    flat.observe("batch", count(lit(1)).as("output_count")).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (df: DataFrame, batchId: Long) =>

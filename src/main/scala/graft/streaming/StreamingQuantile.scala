@@ -59,27 +59,23 @@ object StreamingQuantile {
       groupCol: String, keyCol: String, valueCol: String, k: Int,
       deleteCol: Option[String] = None): Unit = {
     val spark = batch.sparkSession
-    StatePointer.read(spark, dir) match {
-      case Some(v) if v >= batchId => // applied or pointer mismatch
-        StatePointer.replayCheck(spark, dir, batchId)
-      case prev =>
-        val adds = deleteCol.fold(batch)(dc => batch.filter(!col(dc)))
-        val batchSk = Sketch.quantileBuildT(adds, groupCol, keyCol,
-          valueCol, k)
-        val next = prev match {
-          case Some(pv) =>
-            val cur = QuantileState(
-              spark.read.parquet(s"$dir/rows/v=$pv"),
-              spark.read.parquet(s"$dir/taus/v=$pv"))
-            val afterDel = deleteCol.fold(cur)(dc =>
-              Sketch.quantileDeleteT(cur, batch.filter(col(dc)),
-                groupCol, keyCol))
-            Sketch.quantileMergeT(afterDel, batchSk, k)
-          case None => batchSk
-        }
-        next.rows.write.mode("overwrite").parquet(s"$dir/rows/v=$batchId")
-        next.taus.write.mode("overwrite").parquet(s"$dir/taus/v=$batchId")
-        StatePointer.advance(spark, dir, batchId)
+    StatePointer.applyOnce(spark, dir, batchId) { prev =>
+      val adds = deleteCol.fold(batch)(dc => batch.filter(!col(dc)))
+      val batchSk = Sketch.quantileBuildT(adds, groupCol, keyCol,
+        valueCol, k)
+      val next = prev match {
+        case Some(pv) =>
+          val cur = QuantileState(
+            spark.read.parquet(s"$dir/rows/v=$pv"),
+            spark.read.parquet(s"$dir/taus/v=$pv"))
+          val afterDel = deleteCol.fold(cur)(dc =>
+            Sketch.quantileDeleteT(cur, batch.filter(col(dc)),
+              groupCol, keyCol))
+          Sketch.quantileMergeT(afterDel, batchSk, k)
+        case None => batchSk
+      }
+      next.rows.write.mode("overwrite").parquet(s"$dir/rows/v=$batchId")
+      next.taus.write.mode("overwrite").parquet(s"$dir/taus/v=$batchId")
     }
   }
 
@@ -113,13 +109,7 @@ object StreamingQuantile {
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
       deleteCol: Option[String] = None,
       vacuumEvery: Int = 0): DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyBatch(df, dir, batchId, groupCol, keyCol, valueCol, k,
-          deleteCol)
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          vacuum(df.sparkSession, dir)
-      }
+    StatePointer.foldStream(events, checkpointDir, trigger, vacuumEvery,
+        vacuum(_, dir))(
+      applyBatch(_, dir, _, groupCol, keyCol, valueCol, k, deleteCol))
 }

@@ -88,84 +88,79 @@ object StreamingRelease {
       contamThreshold: Double = 0.3, deleteCol: Option[String] = None,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val spark = batch.sparkSession
-    latestVersion(spark, dir) match {
-      case Some(v) if v >= batchId =>
-        StatePointer.replayCheck(spark, dir, batchId)
-      case prev =>
-        val addRows = deleteCol.fold(batch)(dc => batch.filter(!col(dc)).drop(dc))
-        val delRows = deleteCol.map(dc => batch.filter(col(dc)).drop(dc)
-            .select(col(idCol), md5(col(textCol)).as("h"),
-              col(textCol).as("text"))
-            .localCheckpoint(eager = false)) // ids + hashes + fold texts
-        // language + quality gate, scan-side (the curate() projection)
-        val gated = addRows.select(
-            col(idCol), col(textCol), col("lang"), col("source"),
-            TextAnalysis.langId(col(textCol)).as("__lp"),
-            TextAnalysis.qualityScore(col(textCol)).as("__q"))
-          .filter(col("__lp") === lang && col("__q") >= minQuality)
-          .drop("__lp", "__q")
-          .localCheckpoint(eager = false) // docs seg + pairs + fold text
-        // batch-local decontam verdict vs the STATIC benchmark — stored
-        // with the doc, never recomputed
-        val flagged = gated.join(
-          Decontam.contamination(gated, benchmark, gramN, contamThreshold,
-              idCol, textCol)
-            .select(col(idCol), col("contaminated")),
-          Seq(idCol))
-        flagged.write.mode("overwrite").parquet(s"$dir/docs/v=$batchId")
-        val batchPairs = gated
-          .select(md5(col(textCol)).as("h"), col(idCol).as("id"))
-          .localCheckpoint(eager = false) // probe + seg write
-        // hashes whose survivor can change: the batch's and the erasures'
-        val affected = batchPairs.select(col("h"))
-          .unionByName(delRows.fold(batchPairs.select(col("h")).limit(0))(
-            _.select(col("h"))))
-          .distinct()
-          .localCheckpoint(eager = false) // pre + post probes
-        val delNow = delRows.map(_.select(col(idCol).as("id")))
-        // prior state restricted to the affected hashes (broadcast
-        // semi-join — state files scan, only matches shuffle), erased
-        // ids folded out (del lists are erasure requests: tiny, broadcast)
-        val prevLive = prev match {
-          case None => batchPairs.limit(0)
-          case Some(p) =>
-            val pairs = spark.read
-              .parquet((0L to p).map(i => s"$dir/exact/v=$i"): _*)
-              .join(broadcast(affected), Seq("h"), "left_semi")
-            val priorDel = spark.read
-              .parquet((0L to p).map(i => s"$dir/del/v=$i"): _*)
-            pairs.join(broadcast(priorDel), Seq("id"), "left_anti")
-        }
-        val pre = prevLive.groupBy(col("h")).agg(min(col("id")).as("pre"))
-        val postPairs = prevLive.unionByName(batchPairs)
-        val post = delNow.fold(postPairs)(d =>
-            postPairs.join(broadcast(d), Seq("id"), "left_anti"))
-          .groupBy(col("h")).agg(min(col("id")).as("post"))
-        // any row of a hash carries ITS text — batch rows for adds and
-        // displacements, the tombstone row itself for restorations
-        val textOf = gated.select(md5(col(textCol)).as("h"),
-            col(textCol).as("text"))
-          .unionByName(delRows.fold(
-            gated.select(md5(col(textCol)).as("h"), col(textCol).as("text"))
-              .limit(0))(_.select(col("h"), col("text"))))
-          .groupBy(col("h")).agg(min(col("text")).as("text"))
-        val delta = pre.join(post, Seq("h"), "full_outer")
-          .filter(!(col("pre") <=> col("post")))
-          .join(textOf, Seq("h"))
-          .localCheckpoint(eager = false) // feeds adds AND tombstones
-        val adds = delta.filter(col("post").isNotNull)
-          .select(col("post").as(idCol), col("text").as(textCol))
-          .withColumn("_deleted", lit(false))
-        val tombs = delta.filter(col("pre").isNotNull)
-          .select(col("pre").as(idCol), col("text").as(textCol))
-          .withColumn("_deleted", lit(true))
-        StreamingDedup.applyBatch(adds.unionByName(tombs), s"$dir/dedup",
-          batchId, deleteCol = Some("_deleted"), threshold = nearThreshold,
-          idCol = idCol, textCol = textCol)
-        batchPairs.write.mode("overwrite").parquet(s"$dir/exact/v=$batchId")
-        delNow.getOrElse(batchPairs.select(col("id")).limit(0))
-          .write.mode("overwrite").parquet(s"$dir/del/v=$batchId")
-        StatePointer.advance(spark, dir, batchId)
+    StatePointer.applyOnce(spark, dir, batchId) { prev =>
+      // tombstones: ids + hashes + fold texts
+      val (addRows, delRows) = SegmentedState.splitChange(batch, deleteCol)(
+        _.select(col(idCol), md5(col(textCol)).as("h"),
+          col(textCol).as("text")))
+      // language + quality gate, scan-side (the curate() projection)
+      val gated = addRows.select(
+          col(idCol), col(textCol), col("lang"), col("source"),
+          TextAnalysis.langId(col(textCol)).as("__lp"),
+          TextAnalysis.qualityScore(col(textCol)).as("__q"))
+        .filter(col("__lp") === lang && col("__q") >= minQuality)
+        .drop("__lp", "__q")
+        .localCheckpoint(eager = false) // docs seg + pairs + fold text
+      // batch-local decontam verdict vs the STATIC benchmark — stored
+      // with the doc, never recomputed
+      val flagged = gated.join(
+        Decontam.contamination(gated, benchmark, gramN, contamThreshold,
+            idCol, textCol)
+          .select(col(idCol), col("contaminated")),
+        Seq(idCol))
+      flagged.write.mode("overwrite").parquet(s"$dir/docs/v=$batchId")
+      val batchPairs = gated
+        .select(md5(col(textCol)).as("h"), col(idCol).as("id"))
+        .localCheckpoint(eager = false) // probe + seg write
+      // hashes whose survivor can change: the batch's and the erasures'
+      val affected = batchPairs.select(col("h"))
+        .unionByName(delRows.fold(batchPairs.select(col("h")).limit(0))(
+          _.select(col("h"))))
+        .distinct()
+        .localCheckpoint(eager = false) // pre + post probes
+      val delNow = delRows.map(_.select(col(idCol).as("id")))
+      // prior state restricted to the affected hashes (broadcast
+      // semi-join — state files scan, only matches shuffle), erased
+      // ids folded out (del lists are erasure requests: tiny, broadcast)
+      val prevLive = prev match {
+        case None => batchPairs.limit(0)
+        case Some(p) =>
+          val pairs = spark.read
+            .parquet((0L to p).map(i => s"$dir/exact/v=$i"): _*)
+            .join(broadcast(affected), Seq("h"), "left_semi")
+          val priorDel = spark.read
+            .parquet((0L to p).map(i => s"$dir/del/v=$i"): _*)
+          pairs.join(broadcast(priorDel), Seq("id"), "left_anti")
+      }
+      val pre = prevLive.groupBy(col("h")).agg(min(col("id")).as("pre"))
+      val postPairs = prevLive.unionByName(batchPairs)
+      val post = delNow.fold(postPairs)(d =>
+          postPairs.join(broadcast(d), Seq("id"), "left_anti"))
+        .groupBy(col("h")).agg(min(col("id")).as("post"))
+      // any row of a hash carries ITS text — batch rows for adds and
+      // displacements, the tombstone row itself for restorations
+      val textOf = gated.select(md5(col(textCol)).as("h"),
+          col(textCol).as("text"))
+        .unionByName(delRows.fold(
+          gated.select(md5(col(textCol)).as("h"), col(textCol).as("text"))
+            .limit(0))(_.select(col("h"), col("text"))))
+        .groupBy(col("h")).agg(min(col("text")).as("text"))
+      val delta = pre.join(post, Seq("h"), "full_outer")
+        .filter(!(col("pre") <=> col("post")))
+        .join(textOf, Seq("h"))
+        .localCheckpoint(eager = false) // feeds adds AND tombstones
+      val adds = delta.filter(col("post").isNotNull)
+        .select(col("post").as(idCol), col("text").as(textCol))
+        .withColumn("_deleted", lit(false))
+      val tombs = delta.filter(col("pre").isNotNull)
+        .select(col("pre").as(idCol), col("text").as(textCol))
+        .withColumn("_deleted", lit(true))
+      StreamingDedup.applyBatch(adds.unionByName(tombs), s"$dir/dedup",
+        batchId, deleteCol = Some("_deleted"), threshold = nearThreshold,
+        idCol = idCol, textCol = textCol)
+      batchPairs.write.mode("overwrite").parquet(s"$dir/exact/v=$batchId")
+      delNow.getOrElse(batchPairs.select(col("id")).limit(0))
+        .write.mode("overwrite").parquet(s"$dir/del/v=$batchId")
     }
   }
 
@@ -215,11 +210,7 @@ object StreamingRelease {
       nearThreshold: Double = 0.6, gramN: Int = 5,
       contamThreshold: Double = 0.3, deleteCol: Option[String] = None,
       trigger: Trigger = Trigger.ProcessingTime("1 minute")): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(b, benchmark, dir, id, lang, minQuality, nearThreshold,
-          gramN, contamThreshold, deleteCol)
-      }
+    StatePointer.foldStream(docs, checkpointDir, trigger)(
+      applyBatch(_, benchmark, dir, _, lang, minQuality, nearThreshold, gramN,
+        contamThreshold, deleteCol))
 }

@@ -53,32 +53,13 @@ object StreamingScd2 {
     StatePointer.read(spark, dir)
 
   private def manifest(spark: SparkSession, dir: String): Manifest =
-    latestVersion(spark, dir) match {
-      case Some(v) => SegmentedState.readManifest(spark, dir, v)
-      case None => throw new IllegalStateException(s"no history at $dir yet")
-    }
+    SegmentedState.current(spark, dir, "history")
 
   // ---- key column name, persisted once next to the state ----
 
-  private def readKeyCol(spark: SparkSession, dir: String): String = {
-    val f = SegmentedState.fs(spark, dir)
-    val in = f.open(new org.apache.hadoop.fs.Path(s"$dir/_META"))
-    val text = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    text.linesIterator.map(_.trim).find(_.startsWith("key="))
-      .map(_.drop(4)).getOrElse(
-        throw new IllegalStateException(s"malformed _META at $dir"))
-  }
-
-  private def writeMeta(spark: SparkSession, dir: String,
-      keyCol: String): Unit = {
-    val f = SegmentedState.fs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_META")
-    if (!f.exists(p)) {
-      val out = f.create(p, true)
-      try out.write(s"key=$keyCol\n".getBytes("UTF-8")) finally out.close()
-    }
-  }
+  private def readKeyCol(spark: SparkSession, dir: String): String =
+    SegmentedState.readMeta(spark, dir).getOrElse("key",
+      throw new IllegalStateException(s"malformed _META at $dir"))
 
   // ---- the two views ----
 
@@ -107,19 +88,10 @@ object StreamingScd2 {
         throw new IllegalStateException(s"empty manifest at $dir"))
     val segAll = segs.reduce(_ unionByName _)
     val segKeys = broadcast(segAll.select(col(keyCol)).distinct())
-    val payload = base.map(_.columns.toSeq)
-      .getOrElse(segAll.columns.toSeq.filterNot(_ == "_v"))
     val contestedBase = base.map(_
       .join(segKeys, Seq(keyCol), "left_semi").withColumn("_v", lit(-1L)))
-    val contested = contestedBase.fold(segAll)(_ unionByName segAll)
-    val winners = contested
-      .groupBy(col(keyCol))
-      .agg(max_by(
-        struct(payload.filterNot(_ == keyCol).map(col): _*),
-        col("_v")).as("_w"))
-      .select(col(keyCol) +: payload.filterNot(_ == keyCol)
-        .map(c => col(s"_w.$c").as(c)): _*)
-      .select(payload.map(col): _*)
+    val winners = SegmentedState.lastWriterWins(
+      contestedBase.fold(segAll)(_ unionByName segAll), Seq(keyCol))
     base.fold(winners) { b =>
       b.join(segKeys, Seq(keyCol), "left_anti").unionByName(winners)
     }
@@ -144,71 +116,44 @@ object StreamingScd2 {
         s"column name '$reserved' is reserved by the segmented state " +
           "layout (bucket/version markers) — rename the column")
     val spark = df.sparkSession
-    latestVersion(spark, dir) match {
-      case Some(v) if v >= batchId => // applied or pointer mismatch
-        StatePointer.replayCheck(spark, dir, batchId)
-      case prev =>
-        writeMeta(spark, dir, keyCol)
-        val prevM = prev.map(SegmentedState.readManifest(spark, dir, _))
-          .getOrElse(Manifest(None, Nil, Set.empty))
-        // the MERGE sees only the OPEN rows — closed intervals are
-        // invisible to scd2Apply's bulk/touched/new decomposition, so
-        // the apply is O(open + batch) regardless of history depth
-        val applied = (prev match {
-          case Some(_) => Analytics.scd2Apply(
-            openView(spark, dir, prevM, keyCol), df,
-            keyCol, tsCol, stateCol, tieCol)
-          case None => Analytics.scd2History(df, keyCol, tsCol, stateCol, tieCol)
-        }).localCheckpoint(eager = false) // closed + open writes
-        // delta writes: rows this batch closed, and the touched keys'
-        // new open rows (untouched keys' open rows — scd2Apply's bulk —
-        // stay valid in their older segments, shadowed by nothing)
-        applied.filter(!col("is_current"))
-          .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/closed")
-        applied.filter(col("is_current"))
-          .join(broadcast(df.select(col(keyCol)).distinct()),
-            Seq(keyCol), "left_semi")
-          .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/open")
-        val appended = Manifest(prevM.base, prevM.segments :+ batchId,
-          Set.empty)
-        val committed =
-          if (appended.segments.size < maxSegments) appended
-          else SegmentedState.minorPlan(spark, dir, appended, majorRatio) match {
-            case None =>
-              compactTo(spark, dir, appended, batchId, keyCol, nBuckets)
-              Manifest(Some(batchId), Nil, Set.empty)
-            case Some(tailRun) =>
-              // MINOR: closed intervals are append-only — a pure concat;
-              // open rows fold LWW per key across the window (a key's
-              // only live open row is in the latest segment that touched
-              // it, so max-by segment version is exact)
-              SegmentedState.swapIn(tailRun
-                .map(v => spark.read.parquet(s"$dir/seg/v=$v/closed"))
-                .reduce(_ unionByName _),
-                dir, batchId, "closed")
-              val openAll = tailRun.map(v =>
-                  spark.read.parquet(s"$dir/seg/v=$v/open")
-                    .withColumn("_v", lit(v)))
-                .reduce(_ unionByName _)
-              val payload = openAll.columns.toSeq.filterNot(_ == "_v")
-              SegmentedState.swapIn(openAll
-                .groupBy(col(keyCol))
-                .agg(max_by(
-                  struct(payload.filterNot(_ == keyCol).map(col): _*),
-                  col("_v")).as("_w"))
-                .select(col(keyCol) +: payload.filterNot(_ == keyCol)
-                  .map(c => col(s"_w.$c").as(c)): _*)
-                .select(payload.map(col): _*),
-                dir, batchId, "open")
-              SegmentedState.afterMinor(appended, tailRun, batchId)
-          }
-        SegmentedState.writeManifest(spark, dir, batchId, committed)
-        StatePointer.advance(spark, dir, batchId)
+    StatePointer.applyOnce(spark, dir, batchId) { prev =>
+      SegmentedState.writeMeta(spark, dir, "key" -> keyCol)
+      // the MERGE sees only the OPEN rows — closed intervals are
+      // invisible to scd2Apply's bulk/touched/new decomposition, so
+      // the apply is O(open + batch) regardless of history depth
+      val applied = (prev match {
+        case Some(pv) => Analytics.scd2Apply(
+          openView(spark, dir, SegmentedState.readManifest(spark, dir, pv),
+            keyCol), df,
+          keyCol, tsCol, stateCol, tieCol)
+        case None => Analytics.scd2History(df, keyCol, tsCol, stateCol, tieCol)
+      }).localCheckpoint(eager = false) // closed + open writes
+      // delta writes: rows this batch closed, and the touched keys'
+      // new open rows (untouched keys' open rows — scd2Apply's bulk —
+      // stay valid in their older segments, shadowed by nothing)
+      applied.filter(!col("is_current"))
+        .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/closed")
+      applied.filter(col("is_current"))
+        .join(broadcast(df.select(col(keyCol)).distinct()),
+          Seq(keyCol), "left_semi")
+        .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId/open")
+      SegmentedState.appendSegment(spark, dir, batchId, prev, maxSegments)(
+        SegmentedState.tailMinor(spark, dir, batchId, majorRatio)(
+          // closed intervals are append-only — a pure concat; open rows
+          // fold LWW per key across the window (a key's only live open
+          // row is in the latest segment that touched it, so max-by
+          // segment version is exact)
+          "closed" -> SegmentedState.concat(spark, dir, "closed"),
+          "open" -> (run => SegmentedState.lastWriterWins(run.map(v =>
+              spark.read.parquet(s"$dir/seg/v=$v/open")
+                .withColumn("_v", lit(v)))
+            .reduce(_ unionByName _), Seq(keyCol)))))(
+        compactTo(spark, dir, keyCol, nBuckets))
     }
   }
 
-  private def compactTo(spark: SparkSession, dir: String, m: Manifest,
-      v: Long, keyCol: String, nBuckets: Int): Unit = {
+  private def compactTo(spark: SparkSession, dir: String, keyCol: String,
+      nBuckets: Int)(m: Manifest, v: Long): Unit = {
     def bucketed(dfv: DataFrame, sub: String) =
       SegmentedState.writePartitioned(
         dfv.withColumn("b", pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong))),
@@ -221,14 +166,8 @@ object StreamingScd2 {
     * segments); content-identical, manifest rewrite atomic. */
   def compact(spark: SparkSession, dir: String,
       nBuckets: Int = DefaultBuckets): Unit =
-    latestVersion(spark, dir).foreach { v =>
-      val m = SegmentedState.readManifest(spark, dir, v)
-      if (m.segments.nonEmpty) {
-        compactTo(spark, dir, m, v, readKeyCol(spark, dir), nBuckets)
-        SegmentedState.writeManifest(spark, dir, v,
-          Manifest(Some(v), Nil, Set.empty))
-      }
-    }
+    SegmentedState.compact(spark, dir)((m, v) =>
+      compactTo(spark, dir, readKeyCol(spark, dir), nBuckets)(m, v))
 
   /** Reclaim every state dir the `retain` most recent manifests no
     * longer reference ([[SegmentedState.vacuum]]); safe against replays
@@ -246,13 +185,8 @@ object StreamingScd2 {
       vacuumEvery: Int = 0,
       nBuckets: Int = DefaultBuckets,
       majorRatio: Double = StreamingIndex.DefaultMajorRatio): DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyBatch(df, dir, keyCol, tsCol, stateCol, tieCol, batchId,
-          maxSegments, nBuckets, majorRatio)
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          vacuum(df.sparkSession, dir)
-      }
+    StatePointer.foldStream(events, checkpointDir, trigger, vacuumEvery,
+        vacuum(_, dir))(
+      applyBatch(_, dir, keyCol, tsCol, stateCol, tieCol, _, maxSegments,
+        nBuckets, majorRatio))
 }

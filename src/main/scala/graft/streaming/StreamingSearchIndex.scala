@@ -91,13 +91,7 @@ object StreamingSearchIndex {
       nBuckets: Int = StreamingIndex.DefaultBuckets,
       vacuumEvery: Int = 0,
       majorRatio: Double = StreamingIndex.DefaultMajorRatio): DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyBatch(df, dir, batchId, deleteCol, maxSegments, nBuckets,
-          majorRatio)
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          vacuum(df.sparkSession, dir)
-      }
+    StatePointer.foldStream(docs, checkpointDir, trigger, vacuumEvery,
+        vacuum(_, dir))(
+      applyBatch(_, dir, _, deleteCol, maxSegments, nBuckets, majorRatio))
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -59,12 +60,7 @@ object StreamingSnapshot {
     * Plan shape: broadcast segment-keys anti join over the base bulk +
     * per-key latest-version pick over the contested sliver. */
   def readSnapshot(spark: SparkSession, dir: String): DataFrame =
-    latestVersion(spark, dir) match {
-      case Some(v) =>
-        val m = SegmentedState.readManifest(spark, dir, v)
-        mergedView(spark, dir, m)
-      case None => throw new IllegalStateException(s"no snapshot at $dir yet")
-    }
+    mergedView(spark, dir, SegmentedState.current(spark, dir, "snapshot"))
 
   private def mergedView(spark: SparkSession, dir: String,
       m: Manifest): DataFrame = {
@@ -75,28 +71,19 @@ object StreamingSnapshot {
     // keyCols/deleteCol are recorded in the segment sidecar file so the
     // reader needs no out-of-band schema knowledge
     val (keyCols, deleteCol) = readMeta(spark, dir)
-    val segs = m.segments.map(v =>
-      spark.read.parquet(s"$dir/seg/v=$v").withColumn("_v", lit(v)))
-    val segAll = segs.reduce(_ unionByName _)
+    val segAll = segments(spark, dir, m.segments)
     val keys = keyCols.map(col)
     val payload = base.map(_.columns.toSeq)
       .getOrElse(segAll.columns.toSeq.filterNot(c => c == deleteCol || c == "_v"))
     val contestedBase = base.map(_
         .join(broadcast(segAll.select(keys: _*).distinct()), keyCols, "left_semi")
         .withColumn(deleteCol, lit(false)).withColumn("_v", lit(-1L)))
-    val contested = contestedBase.fold(segAll)(_ unionByName segAll)
-    // last writer wins: max_by over the struct of the full row keyed by
-    // segment version. Ties can only be duplicate pure tombstones (the
-    // write-side rail forbids duplicate surviving keys), and a tombstone
-    // winner drops either way.
-    val winners = contested
-      .groupBy(keys: _*)
-      .agg(max_by(
-        struct((payload.filterNot(keyCols.contains).map(col) :+ col(deleteCol)): _*),
-        col("_v")).as("_w"))
-      .filter(!col(s"_w.$deleteCol"))
-      .select(keys ++ payload.filterNot(keyCols.contains)
-        .map(c => col(s"_w.$c").as(c)): _*)
+    // last writer wins per key. Ties can only be duplicate pure
+    // tombstones (the write-side rail forbids duplicate surviving keys),
+    // and a tombstone winner drops either way.
+    val winners = SegmentedState.lastWriterWins(
+        contestedBase.fold(segAll)(_ unionByName segAll), keyCols)
+      .filter(!col(deleteCol))
       .select(payload.map(col): _*)
     base.fold(winners) { b =>
       b.join(broadcast(segAll.select(keys: _*).distinct()), keyCols, "left_anti")
@@ -104,51 +91,18 @@ object StreamingSnapshot {
     }
   }
 
+  /** The change rows of `versions`, each tagged with its version `_v`. */
+  private def segments(spark: SparkSession, dir: String,
+      versions: Seq[Long]): DataFrame =
+    versions.map(v =>
+        spark.read.parquet(s"$dir/seg/v=$v").withColumn("_v", lit(v)))
+      .reduce(_ unionByName _)
+
   // ---- key/tombstone column names, persisted once next to the state ----
 
   private def readMeta(spark: SparkSession, dir: String): (Seq[String], String) = {
-    val f = SegmentedState.fs(spark, dir)
-    val in = f.open(new org.apache.hadoop.fs.Path(s"$dir/_META"))
-    val text = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val kv = text.linesIterator.map(_.trim).filter(_.nonEmpty)
-      .map { l => val Array(k, rest) = l.split("=", 2); (k, rest) }.toMap
+    val kv = SegmentedState.readMeta(spark, dir)
     (kv("keys").split(",").toSeq, kv("delete_col"))
-  }
-
-  private def writeMeta(spark: SparkSession, dir: String,
-      keyCols: Seq[String], deleteCol: String): Unit = {
-    val f = SegmentedState.fs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_META")
-    if (!f.exists(p)) {
-      val out = f.create(p, true)
-      try out.write(
-        s"keys=${keyCols.mkString(",")}\ndelete_col=$deleteCol\n"
-          .getBytes("UTF-8"))
-      finally out.close()
-    }
-  }
-
-  /** LWW-fold a window of change segments into ONE change segment: per
-    * key the latest (max `_v`) row wins, and tombstone winners are KEPT
-    * AS ROWS — they must continue to shadow base keys at read. The
-    * output is itself a legal change segment (one row per key), placed
-    * at the window's max version so ordering against the base and any
-    * future segment is preserved. Pure plan construction. */
-  private def windowFold(spark: SparkSession, dir: String,
-      versions: Seq[Long], keyCols: Seq[String]): DataFrame = {
-    val segAll = versions.map(v =>
-        spark.read.parquet(s"$dir/seg/v=$v").withColumn("_v", lit(v)))
-      .reduce(_ unionByName _)
-    val payload = segAll.columns.toSeq.filterNot(_ == "_v")
-    val keys = keyCols.map(col)
-    segAll.groupBy(keys: _*)
-      .agg(max_by(
-        struct(payload.filterNot(keyCols.contains).map(col): _*),
-        col("_v")).as("_w"))
-      .select(keys ++ payload.filterNot(keyCols.contains)
-        .map(c => col(s"_w.$c").as(c)): _*)
-      .select(payload.map(col): _*)
   }
 
   private[graft] def applyBatch(df: DataFrame, dir: String,
@@ -166,82 +120,61 @@ object StreamingSnapshot {
         s"snapshot column name '$reserved' is reserved by the segmented " +
           "state layout (bucket/version markers) — rename the column")
     val spark = df.sparkSession
-    latestVersion(spark, dir) match {
-      case Some(v) if v >= batchId => // applied or pointer mismatch
-        StatePointer.replayCheck(spark, dir, batchId)
-      case prev =>
-        writeMeta(spark, dir, keyCols, deleteCol)
-        // segment write: raw change rows, bytes ∝ batch; the ambiguity
-        // rail rides this job so a bad batch fails BEFORE it commits
-        Merge.railUniqueKeys(df, keyCols, deleteCol)
-          .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId")
-        val prevM = prev.map(SegmentedState.readManifest(spark, dir, _))
-          .getOrElse(Manifest(None, Nil, Set.empty))
-        val appended = prevM.copy(segments = prevM.segments :+ batchId)
-        val committed =
-          if (appended.segments.size < maxSegments) appended
+    StatePointer.applyOnce(spark, dir, batchId) { prev =>
+      SegmentedState.writeMeta(spark, dir, "keys" -> keyCols.mkString(","),
+        "delete_col" -> deleteCol)
+      // segment write: raw change rows, bytes ∝ batch; the ambiguity
+      // rail rides this job so a bad batch fails BEFORE it commits
+      Merge.railUniqueKeys(df, keyCols, deleteCol)
+        .write.mode("overwrite").parquet(s"$dir/seg/v=$batchId")
+      SegmentedState.appendSegment(spark, dir, batchId, prev, maxSegments) {
+        appended =>
+          if (appended.base.isEmpty ||
+              SegmentedState.segBytesDue(spark, dir, appended, majorRatio))
+            None
           else {
+            // MINOR: LWW-fold the whole window into this batch's segment
+            // — write ∝ window, base untouched on disk. LWW's total order
+            // (unlike the index's del boundaries) lets the entire window
+            // fold at once; per key the latest row wins and tombstone
+            // winners stay as rows so they keep shadowing base keys at
+            // read. The folded segment sits at the window's max version,
+            // so ordering against the base and any future segment holds.
+            // Stage-and-swap inside the uncommitted v=batchId dir.
             val fs = SegmentedState.fs(spark, dir)
-            def du(p: String): Long = {
-              val path = new org.apache.hadoop.fs.Path(p)
-              if (!fs.exists(path)) 0L
-              else fs.getContentSummary(path).getLength
-            }
-            val baseBytes = appended.base.fold(0L)(b => du(s"$dir/base/v=$b"))
-            val segBytes = appended.segments.map(v => du(s"$dir/seg/v=$v")).sum
-            if (appended.base.isEmpty || segBytes >= majorRatio * baseBytes) {
-              // MAJOR: fold everything into a fresh bucketed base
-              val keys = keyCols.map(col)
-              SegmentedState.writePartitioned(
-                mergedView(spark, dir, appended)
-                  .withColumn("b", pmod(xxhash64(keys: _*), lit(nBuckets.toLong))),
-                s"$dir/base/v=$batchId", Seq("b"))
-              Manifest(Some(batchId), Nil, Set.empty)
-            } else {
-              // MINOR: LWW-fold the whole window into this batch's
-              // segment — write ∝ window, base untouched on disk. LWW's
-              // total order (unlike the index's del boundaries) lets the
-              // entire window fold at once; tombstone winners stay as
-              // rows so they keep shadowing base keys at read.
-              // Stage-and-swap inside the uncommitted v=batchId dir.
-              val staged = s"$dir/seg/v=$batchId/.seg_minor"
-              windowFold(spark, dir, appended.segments, keyCols)
-                .write.mode("overwrite").parquet(staged)
-              val segPath = new org.apache.hadoop.fs.Path(s"$dir/seg/v=$batchId")
-              val stagedPath = new org.apache.hadoop.fs.Path(staged)
-              val tmp = new org.apache.hadoop.fs.Path(s"$dir/seg/.minor_$batchId")
-              fs.delete(tmp, true) // stale tmp from a crashed prior attempt
-              if (!fs.rename(stagedPath, tmp))
-                throw new java.io.IOException(s"minor-compaction stage failed: $tmp")
-              fs.delete(segPath, true)
-              if (!fs.rename(tmp, segPath))
-                throw new java.io.IOException(s"minor-compaction rename failed: $segPath")
-              Manifest(appended.base, Seq(batchId), Set.empty)
-            }
+            val staged = s"$dir/seg/v=$batchId/.seg_minor"
+            SegmentedState.lastWriterWins(segments(spark, dir,
+                appended.segments), keyCols)
+              .write.mode("overwrite").parquet(staged)
+            val segPath = new Path(s"$dir/seg/v=$batchId")
+            val tmp = new Path(s"$dir/seg/.minor_$batchId")
+            fs.delete(tmp, true) // stale tmp from a crashed prior attempt
+            if (!fs.rename(new Path(staged), tmp))
+              throw new java.io.IOException(s"minor-compaction stage failed: $tmp")
+            fs.delete(segPath, true)
+            if (!fs.rename(tmp, segPath))
+              throw new java.io.IOException(s"minor-compaction rename failed: $segPath")
+            Some(Manifest(appended.base, Seq(batchId), Set.empty))
           }
-        SegmentedState.writeManifest(spark, dir, batchId, committed)
-        StatePointer.advance(spark, dir, batchId)
+      }(compactTo(spark, dir, keyCols, nBuckets))
     }
   }
+
+  /** MAJOR: fold everything into a fresh key-bucketed base. */
+  private def compactTo(spark: SparkSession, dir: String,
+      keyCols: Seq[String], nBuckets: Int)(m: Manifest, v: Long): Unit =
+    SegmentedState.writePartitioned(
+      mergedView(spark, dir, m)
+        .withColumn("b", pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets.toLong))),
+      s"$dir/base/v=$v", Seq("b"))
 
   /** Out-of-band compaction: fold the live segments into a new
     * bucket-partitioned base at the current version (no-op without
     * segments). Content-identical; the manifest rewrite is atomic. */
   def compact(spark: SparkSession, dir: String,
       nBuckets: Int = DefaultBuckets): Unit =
-    latestVersion(spark, dir).foreach { v =>
-      val m = SegmentedState.readManifest(spark, dir, v)
-      if (m.segments.nonEmpty) {
-        val (keyCols, _) = readMeta(spark, dir)
-        SegmentedState.writePartitioned(
-          mergedView(spark, dir, m)
-            .withColumn("b",
-              pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets.toLong))),
-          s"$dir/base/v=$v", Seq("b"))
-        SegmentedState.writeManifest(spark, dir, v,
-          Manifest(Some(v), Nil, Set.empty))
-      }
-    }
+    SegmentedState.compact(spark, dir)((m, v) =>
+      compactTo(spark, dir, readMeta(spark, dir)._1, nBuckets)(m, v))
 
   /** Reclaim every state dir the `retain` most recent manifests no
     * longer reference (`retain` > 1 = concurrent-reader grace window —
@@ -259,13 +192,8 @@ object StreamingSnapshot {
       nBuckets: Int = DefaultBuckets,
       vacuumEvery: Int = 0,
       majorRatio: Double = DefaultMajorRatio): DataStreamWriter[org.apache.spark.sql.Row] =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyBatch(df, dir, keyCols, deleteCol, batchId, maxSegments,
-          nBuckets, majorRatio)
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
-          vacuum(df.sparkSession, dir)
-      }
+    StatePointer.foldStream(changes, checkpointDir, trigger, vacuumEvery,
+        vacuum(_, dir))(
+      applyBatch(_, dir, keyCols, deleteCol, _, maxSegments, nBuckets,
+        majorRatio))
 }

@@ -227,17 +227,4 @@ class EventEtlSpec extends SparkTestBase {
     assert(p.getAs[String]("session_id_old") === "  42abc")
     assert(p.getAs[Double]("session_id") === 42.0)
   }
-
-  test("batch metrics: counts and true min/max publish time") {
-    val rows = Seq(
-      (1L, b64(s"""{"jsonPayload":$flatEvent,"attributes":{"logging.googleapis.com/timestamp":"2024-01-01T00:00:05.000Z"}}""")),
-      (2L, b64("""{"jsonPayload":{"event_type":"bad","time":0},"attributes":{"logging.googleapis.com/timestamp":"2024-01-01T00:00:01.000Z"}}""")))
-      .toDF("fixture_id", "value")
-    val m = EventEtl.batchMetrics(rows, EventEtl.pipeline(rows, Key)).head()
-    assert(m.getAs[Long]("input_count") === 2L)
-    assert(m.getAs[Long]("output_count") === 2L) // identify + event; invalid dropped
-    // true min/max — including the INVALID message's publish time (B1 fixed)
-    assert(m.getAs[String]("min_publish_time") === "2024-01-01T00:00:01.000Z")
-    assert(m.getAs[String]("max_publish_time") === "2024-01-01T00:00:05.000Z")
-  }
 }

@@ -52,6 +52,19 @@ class GraphAnnSpec extends SparkTestBase {
     assert(row.getBoolean(1))
   }
 
+  test("labeled walk phases restore the caller's job description") {
+    val emb = clustered().localCheckpoint()
+    val g = GraphAnn.buildGraph(emb, m = 8, lshBits = 4, probes = 2)
+      .localCheckpoint()
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller phase")
+    try {
+      GraphAnn.search(emb, g, $"vec_id" < 6, k = 5, ef = 24, iters = 3,
+        entries = 8).collect()
+      assert(sc.getLocalProperty("spark.job.description") === "caller phase")
+    } finally sc.setJobDescription(null)
+  }
+
   test("driver-side idBuckets equals the srcBucket column (the gramBuckets pin)") {
     val ids = Seq(0L, 1L, 7L, 123456789L, -42L, Long.MaxValue)
     val fromCol = ids.toDF("src")

@@ -148,7 +148,10 @@ class StreamingSinkSpec extends SparkTestBase {
     input.addData(
       envelope("u1", "login", 1000),
       b64("""{"jsonPayload":{"user_id":"u2","event_type":"e","time":2,"session_id":"oops"}}"""),
-      b64("""{"jsonPayload":{"event_type":"bad","time":0}}"""))
+      // invalid, with the batch's earliest publish time: min/max count
+      // every pulled message (synchronous-pull.js:59-63)
+      b64("""{"jsonPayload":{"event_type":"bad","time":0},""" +
+        """"attributes":{"logging.googleapis.com/timestamp":"2023-12-31T23:59:59.000Z"}}"""))
     val q = flat.writeStream
       .format("memory").queryName("graft_observe_test")
       .outputMode("append")
@@ -162,6 +165,10 @@ class StreamingSinkSpec extends SparkTestBase {
     assert(parse.map(_.getAs[Long]("input_count")).sum === 3L)
     assert(parse.map(_.getAs[Long]("invalid_count")).sum === 1L)
     assert(parse.map(_.getAs[Long]("repaired_count")).sum === 1L)
+    assert(parse.flatMap(r => Option(r.getAs[String]("min_publish_time")))
+      .min === "2023-12-31T23:59:59.000Z")
+    assert(parse.flatMap(r => Option(r.getAs[String]("max_publish_time")))
+      .max === "2024-01-01T00:00:00.000Z")
   }
 
   test("streaming: stateful sessionization emits finalized sessions on watermark") {
