@@ -11,8 +11,10 @@ import org.apache.spark.sql.SparkSession
   * down to a row count and flatters them.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The session a bench run measures in: `local[SPARK_GRAFT_CPUS]` (4 by
+    * default) with as many shuffle partitions and no UI; also points
+    * `graft.artifact.dir` at SPARK_GRAFT_ARTIFACT_DIR and wipes it. */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -32,6 +34,30 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_DIR",
         "/root/repo/target/bench_artifacts")
     graft.sources.Artifacts.wipe()
+    spark
+  }
+
+  /** One timed bench run of catalog row `name`: builds the row, consumes
+    * it with a `noop` write and releases its pinned checkpoints; returns
+    * the seconds taken.
+    *
+    * A throwing row fails the WHOLE bench loudly: r13 swallowed
+    * Throwable here and the replayCheck regression turned ~25 streamed
+    * rows' pins into time-to-throw measurements that looked like
+    * steady-state serves. A bogus number is worse than no number. */
+  def runRow(spark: SparkSession, sfDir: String, name: String): Double = {
+    val fn = SparkEntry.queries(name)
+    val t0 = System.nanoTime()
+    try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    catch { case t: Throwable =>
+      throw new RuntimeException(s"bench row $name failed", t) }
+    finally ops.Prefix.releaseAll() // drop this row's pinned checkpoints
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
     // Multiple passes, report per-query MIN (steady state): the build host
     // shows intermittent external contention that can inflate a single
     // CPU-bound task 10-100x at random (identical plans measured
@@ -59,35 +85,20 @@ object Bench {
     // comparisons should use the pass MEDIAN closest to the row's
     // measurement.
     val anchorName = "q_dedup_exact"
-    // A throwing row fails the WHOLE bench loudly: r13 swallowed
-    // Throwable here and the replayCheck regression turned ~25 streamed
-    // rows' pins into time-to-throw measurements that looked like
-    // steady-state serves. A bogus number is worse than no number.
-    def runOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case t: Throwable =>
-        throw new RuntimeException(s"bench row $name failed", t) }
-      finally ops.Prefix.releaseAll() // drop this row's pinned checkpoints
-      (System.nanoTime() - t0) / 1e9
-    }
     def onePass(tag: String): (Seq[(String, Double)], Seq[Double]) = {
-      val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) =>
-          only.forall(_.contains(name)) && !sfGated.contains(name) }
+      val qs = SparkEntry.queries.keys.toSeq.sorted
+        .filter(name => only.forall(_.contains(name)) && !sfGated.contains(name))
       val anchors = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val anchorFn = SparkEntry.queries.get(anchorName)
-        .filter(_ => qs.size > 1)
+      val anchored = SparkEntry.queries.contains(anchorName) && qs.size > 1
       val every = math.max(qs.size / 5, 1)
-      def sampleAnchor(): Unit = anchorFn.foreach { fn =>
-        val dt = runOne(anchorName, fn)
+      def sampleAnchor(): Unit = if (anchored) {
+        val dt = runRow(spark, sfDir, anchorName)
         anchors += dt
         System.err.println(f"[bench] $tag anchor $dt%.2fs")
       }
       sampleAnchor()
-      val results = qs.zipWithIndex.map { case ((name, fn), i) =>
-        val dt = runOne(name, fn)
+      val results = qs.zipWithIndex.map { case (name, i) =>
+        val dt = runRow(spark, sfDir, name)
         System.err.println(f"[bench] $tag $name $dt%.1fs")
         if ((i + 1) % every == 0 && i + 1 < qs.size) sampleAnchor()
         name -> dt

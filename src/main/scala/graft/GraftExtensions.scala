@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.expr.{DotProduct, HmacSha256, MinHashSig, SimHash64, TextProfile}
+import graft.expr.{HmacSha256, TextProfile}
 
 /** Library SQL surface: the engine's custom expressions as SQL functions.
   *
@@ -18,10 +18,8 @@ import graft.expr.{DotProduct, HmacSha256, MinHashSig, SimHash64, TextProfile}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, usage, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft", null, name, usage, ""),
-        builder))
+      ext.injectFunction((FunctionIdentifier(name),
+        GraftExtensions.info(name, usage), builder))
     }
   }
 }
@@ -67,6 +65,11 @@ object GraftExtensions {
       exprs => expr.SpaceSavingTopK(exprs.head,
         foldableInt(exprs, 1, "space_saving_topk", "capacity"))))
 
+  /** The function's catalog entry (`DESCRIBE FUNCTION`), source `built-in`. */
+  private[graft] def info(name: String, usage: String): ExpressionInfo =
+    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "",
+      "built-in")
+
   /** Resolve argument `i` as a foldable integer literal, or raise a clean,
     * descriptive error (a column reference there would otherwise surface as
     * an unevaluable/ClassCastException internal error at resolution time). */
@@ -83,15 +86,9 @@ object GraftExtensions {
 
 object GraftFunctions {
   /** Register every graft SQL function on an existing session. */
-  def registerAll(spark: SparkSession): Unit = {
-    HmacSha256.register(spark)
-    DotProduct.register(spark)
-    SimHash64.register(spark)
-    MinHashSig.register(spark)
-    TextProfile.register(spark)
-    expr.ShingleHashes.register(spark)
-    expr.Md5TokenHashes.register(spark)
-    expr.RepetitionGrams.register(spark)
-    expr.SpaceSavingTopK.register(spark)
-  }
+  def registerAll(spark: SparkSession): Unit =
+    GraftExtensions.functions.foreach { case (name, usage, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(
+        FunctionIdentifier(name), GraftExtensions.info(name, usage), builder)
+    }
 }

@@ -1625,7 +1625,7 @@ object Queries {
         .orderBy(col("doc_id"))),
     // MinHash accuracy contract: signature-agreement estimate within 0.15
     // of exact Jaccard on every ≥0.3 pair (measured max deviation < 0.1 at
-    // every SF, MhProbe; deterministic hashes ⇒ the margin is safe)
+    // every SF; deterministic hashes ⇒ the margin is safe)
     "q_minhash_est" -> ((s, dir) =>
       llm.Dedup.minhashEstimateContract(
           tWide(s, dir, "documents").withColumn("_all", lit(1)),
@@ -1960,7 +1960,7 @@ object Queries {
     // the JL sketch as a two-stage ANN prefilter: does the exact top-5
     // survive a 50-deep projected shortlist? Deterministic (md5 matrix, no
     // RNG): measured panel recall 0.3-0.4 at sf0.1, ≥0.6 at sf0.01 on this
-    // near-isotropic synthetic corpus (RpProbe) — bound 0.3
+    // near-isotropic synthetic corpus — bound 0.3
     "q_knn_rp" -> ((s, dir) =>
       llm.Similarity.rpKnnRecallPanel(tWide(s, dir, "embeddings"),
         col("vec_id") < 10, k = 5, kOut = 32, candidates = 50,
@@ -2107,7 +2107,7 @@ object Queries {
     // bounded neighbor graph from capped LSH-bucket candidates + one
     // NN-descent round + reversal (out-degree ≤ 16), beam-walked from
     // digest-ranked entries. Panel recall contract: measured 1.0 at ALL
-    // THREE SFs with these params (ProbeGraphAnn; the walk re-finds
+    // THREE SFs with these params (the walk re-finds
     // every exact top-5 on this isotropic corpus) — bound 0.7 leaves
     // margin. Build is bucket-bounded (never all-pairs); the walk's
     // per-round frontier is |Q|·ef bounded driver state.

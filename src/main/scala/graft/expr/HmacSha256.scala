@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import javax.crypto.Mac
 import javax.crypto.spec.SecretKeySpec
 
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -167,9 +167,4 @@ object HmacSha256 {
   def apply(key: Column, props: Column*): Column =
     GraftBridge.column(HmacSha256(
       GraftBridge.expression(key) +: props.map(GraftBridge.expression)))
-
-  /** Register as a SQL function (`SELECT hmac_sha256(key, c1, c2)`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hmac_sha256", exprs => HmacSha256(exprs), "built-in")
 }

@@ -1,6 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -81,15 +81,4 @@ object MinHashSig {
 
   def apply(hashes: Column, k: Int): Column =
     GraftBridge.column(MinHashSig(GraftBridge.expression(hashes), k))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", { exprs =>
-        val k = if (exprs(1).foldable) exprs(1).eval() else null
-        k match {
-          case n: Number => MinHashSig(exprs.head, n.intValue())
-          case _ => throw new IllegalArgumentException(
-            s"minhash_sig: argument 'k' must be an integer literal, got ${exprs(1).sql}")
-        }
-      }, "built-in")
 }

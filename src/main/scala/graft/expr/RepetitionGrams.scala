@@ -146,18 +146,4 @@ object RepetitionGrams {
 
   def apply(text: Column, ns: Seq[Int]): Column =
     GraftBridge.column(RepetitionGrams(GraftBridge.expression(text), ns))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "repetition_grams", { exprs =>
-        val ns = exprs.drop(1).map { e =>
-          val v = if (e.foldable) e.eval() else null
-          v match {
-            case n: Number => n.intValue()
-            case _ => throw new IllegalArgumentException(
-              "repetition_grams: gram sizes must be integer literals")
-          }
-        }
-        RepetitionGrams(exprs.head, ns)
-      }, "built-in")
 }

@@ -1,6 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -129,17 +129,6 @@ object ShingleHashes {
 
   def apply(text: Column, w: Int, distinct: Boolean): Column =
     GraftBridge.column(ShingleHashes(GraftBridge.expression(text), w, distinct))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes", { exprs =>
-        val w = if (exprs(1).foldable) exprs(1).eval() else null
-        w match {
-          case n: Number => ShingleHashes(exprs.head, n.intValue())
-          case _ => throw new IllegalArgumentException(
-            s"shingle_hashes: argument 'w' must be an integer literal, got ${exprs(1).sql}")
-        }
-      }, "built-in")
 }
 
 /** Engine-portable token hashes in one pass: whitespace-split lowercased
@@ -225,8 +214,4 @@ object Md5TokenHashes {
 
   def apply(text: Column): Column =
     GraftBridge.column(Md5TokenHashes(GraftBridge.expression(text)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_token_hashes", { exprs => Md5TokenHashes(exprs.head) }, "built-in")
 }

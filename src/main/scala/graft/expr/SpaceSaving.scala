@@ -109,19 +109,6 @@ case class SpaceSavingTopK(
 }
 
 object SpaceSavingTopK {
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "space_saving_topk", { exprs =>
-        val cap = if (exprs(1).foldable) exprs(1).eval() else null
-        cap match {
-          case n: Number => SpaceSavingTopK(exprs.head, n.intValue())
-          case _ => throw new IllegalArgumentException(
-            "space_saving_topk: argument 'capacity' must be an integer " +
-              s"literal, got ${exprs(1).sql}")
-        }
-      }, "built-in")
-
   val resultType: DataType = ArrayType(StructType(Seq(
     StructField("item", StringType, nullable = false),
     StructField("cnt", LongType, nullable = false),

@@ -1,6 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -186,8 +186,4 @@ object TextProfile {
 
   def apply(text: Column): Column =
     GraftBridge.column(TextProfile(GraftBridge.expression(text)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "text_profile", exprs => TextProfile(exprs.head), "built-in")
 }

@@ -1,6 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -97,11 +97,6 @@ object DotProduct {
   /** Column-API entry: `vecDot(a, b)`. */
   def apply(a: Column, b: Column): Column =
     GraftBridge.column(DotProduct(GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** Register as SQL `vec_dot(a, b)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", { exprs => DotProduct(exprs(0), exprs(1)) }, "built-in")
 }
 
 /** 64-bit SimHash over an `array<long>` of token hashes: per-bit ±1 voting,
@@ -167,8 +162,4 @@ object SimHash64 {
 
   def apply(tokenHashes: Column): Column =
     GraftBridge.column(SimHash64(GraftBridge.expression(tokenHashes)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", { exprs => SimHash64(exprs.head) }, "built-in")
 }

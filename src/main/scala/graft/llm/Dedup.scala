@@ -1060,10 +1060,20 @@ object Dedup {
     * than k (can't host k nonempty segments) pair through the original
     * banded join against everything in length range.
     *
-    * Plan shape at 100 TB: the segment index (k rows/record, ~one
-    * segment string each) broadcast-hash-joins the probe explosion
-    * (O(d²) substrings/record) — the corpus crosses NO exchange; only
-    * the matched candidate sliver shuffles for its pair dedup. */
+    * Plan shape (formatted plan at sf0.01 in
+    * plans/r16/q_fuzzy_allpairs.explain): no join is hinted, so the
+    * strategies are Spark's size-based choices. While the estimated
+    * size of the checkpointed records is under
+    * `spark.sql.autoBroadcastJoinThreshold` (it is at sf0.01), Spark
+    * broadcasts the segment index (k rows/record) into a hash join
+    * with the probe explosion (O(d²) substrings/record), and broadcasts
+    * the whole record table into the short-record fallback's
+    * nested-loop join; the one shuffle is then the candidate pairs'
+    * dedup on (id_a, id_b), a sort aggregate that carries both texts.
+    * Above the threshold the segment join is a sort-merge join that
+    * shuffles both the index and the probe explosion, and the
+    * fallback, which has no equi-key, can only plan as a cartesian
+    * product. */
   private def passJoinPairs(recs0: DataFrame, maxDist: Int): DataFrame = {
     val k = maxDist + 1
     val recs = recs0.select(col("id"), col("rec"), col("len"))

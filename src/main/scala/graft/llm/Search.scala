@@ -127,14 +127,14 @@ object Search {
     * partial-agg-friendly, skew-free key. df aggregates tf by gram
     * (partial agg: one row per gram per task crosses). The prune then
     * re-joins df onto tf as a SHUFFLE-merge join — hinted, because a
-    * broadcast build side cannot reuse a shuffle exchange (this repo's
-    * measured ReuseProbe fact) and would re-derive the whole
-    * scan→explode→tf chain; with both sides shuffling, the tf subtree
-    * materializes ONCE: statically as ReusedExchange, under AQE as
-    * runtime stage reuse keyed on canonicalized-subtree equality — NOT
-    * visible in plan text, so the evidence is the task-input-bytes
-    * probe (ReuseScratch: identical-subtree form reads 1× the corpus,
-    * the column-pruned form exactly 2×). */
+    * broadcast build side cannot reuse a shuffle exchange (measured on
+    * a broadcast plan: 2 parquet scans, 0 ReusedExchange) and would
+    * re-derive the whole scan→explode→tf chain; with both sides
+    * shuffling, the tf subtree materializes ONCE: statically as
+    * ReusedExchange, under AQE as runtime stage reuse keyed on
+    * canonicalized-subtree equality — NOT visible in plan text, so the
+    * evidence is task input bytes: the identical-subtree form reads 1×
+    * the corpus, the column-pruned form exactly 2×. */
   def invertedIndex(docs: DataFrame, minDf: Long = 1L,
       maxDf: Long = Long.MaxValue, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
@@ -190,7 +190,8 @@ object Search {
     // consumer of `tf`, Catalyst column-prunes the df branch's tf
     // aggregate down to a bare distinct, the two tf subtrees stop
     // canonicalizing equal, and the ReusedExchange below silently
-    // degrades to a second corpus scan (measured with ReuseProbe).
+    // degrades to a second corpus scan (measured: exactly 2× the
+    // corpus's task input bytes).
     val dfp = tf.groupBy(col("gram"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
       .filter(col("df") >= minDf && col("df") <= maxDf)

@@ -1,7 +1,10 @@
 package org.apache.spark.sql
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 
+import org.apache.spark.scheduler.SparkListenerInterface
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.internal.SQLConf
 
@@ -12,7 +15,9 @@ import org.apache.spark.sql.internal.SQLConf
   * tells an explicitly set SQL conf from its default; the session's Hadoop
   * conf and the key of the streaming checkpoint file manager; and session
   * cloning plus plan rebinding, so a relation can be built under a cloned
-  * conf and run on the caller's session. Standard extension-library pattern — no
+  * conf and run on the caller's session; and the context's listener bus,
+  * so a counting listener sees every event of the work it measured.
+  * Standard extension-library pattern — no
   * Spark internals are modified, only re-exported. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -40,4 +45,13 @@ object GraftBridge {
   def ofRows(spark: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
+
+  /** Blocks until every event already posted to `spark`'s listener bus has
+    * reached every listener (`LiveListenerBus.waitUntilEmpty`, 10 s cap). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The listeners registered on `spark`'s listener bus, in every queue. */
+  def listeners(spark: SparkSession): Seq[SparkListenerInterface] =
+    spark.sparkContext.listenerBus.listeners.asScala.toSeq
 }

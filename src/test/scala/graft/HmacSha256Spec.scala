@@ -62,7 +62,7 @@ class HmacSha256Spec extends SparkTestBase {
   }
 
   test("SQL registration works") {
-    HmacSha256.register(spark)
+    GraftFunctions.registerAll(spark)
     val r = spark.sql(s"SELECT hmac_sha256('$Key', 'uid-1') AS h").head().getString(0)
     assert(r === "bf360d6382c1f58f7dfbc4291cbf8953699668dbdfa8007e1b337c6596eedf1c")
   }

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** Single-scan contracts for the r13 "index family reads the corpus
   * twice" fix: the separate `docs.count()` / distinct-count corpus pass
   * each flagged row used to pay was EXACTLY one extra scheduled job (a
@@ -26,21 +22,9 @@ class IndexScanSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def countJobs(f: => Unit): Int = {
-    val jobs = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { f; Thread.sleep(300) /* listener delivery lag */ }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
-
-  private def rowJobs(name: String): Int = countJobs {
+  private def rowJobs(name: String): Int = graft.tools.Profile.measure(spark) {
     Queries.all(name)(spark, dir).write.format("noop").mode("overwrite").save()
-  }
+  }.jobs
 
   // (row, budget): measured counts are printed on every run for re-pinning
   private val budgets = Seq(

@@ -1,11 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.llm.Dedup
+import graft.tools.Profile
 
 /** Scheduled-job-COUNT contracts for the iterative operators: the clustering
   * fixpoint is job-count-bound (each round = one action), so the job total
@@ -16,25 +14,13 @@ import graft.llm.Dedup
 class JobCountSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def countJobs(f: => Unit): Int = {
-    val jobs = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { f; Thread.sleep(300) /* listener delivery lag */ }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
-
   test("clusters: planted graph converges within the job budget") {
     // two chains (0-1-2, 10-11) + the empty-singleton case exercised via
     // pair-less ids being absent entirely
     val pairs = Seq((0L, 1L), (1L, 2L), (10L, 11L)).toDF("id_a", "id_b")
-    val n = countJobs {
+    val n = Profile.measure(spark) {
       Dedup.clusters(pairs).write.format("noop").mode("overwrite").save()
-    }
+    }.jobs
     // measured 15 on the round-5 structure: init (edges + labels lazy
     // checkpoints materialize as their own jobs + the seed sum), the
     // 2-round fixpoint (chain 0-1-2 needs one propagation + one confirm,
@@ -67,10 +53,10 @@ class JobCountSpec extends SparkTestBase {
     val bench = Seq((900L, good(5)._2, "en", "bench", good(5)._2.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     var released: Array[org.apache.spark.sql.Row] = null
-    val n = countJobs {
+    val n = Profile.measure(spark) {
       released = graft.llm.Curation.releasePipeline(docs, bench, budget = 64L)
         .collect()
-    }
+    }.jobs
     // measured 47 on the round-13 structure: curateNearDup alone is 26
     // (its persist + LSH + clustering fixpoint, broadcast-heavy), the
     // composed tail adds 21 (decontam gram broadcast + anti-join, vocab

@@ -194,7 +194,7 @@ class MainSpec extends SparkTestBase {
     try {
       assert(Main.runSupervised(s, cfg, poster = RecordingPoster,
         trigger = Trigger.AvailableNow(), maxRestarts = 0) === 0)
-      Thread.sleep(300) // listener delivery lag
+      GraftBridge.drainListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(l)
     val sent = RecordingPoster.bodies.mkString("\n")
     for (i <- 0 until n) assert(sent.contains(s"\"device_id\":\"d-u$i\""), s"u$i not posted")
