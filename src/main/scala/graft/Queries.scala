@@ -37,6 +37,34 @@ object Queries {
         lit("utf8").as("format"),
         lit(1).as("height"))
 
+  // `df` with the `_deleted` flag the streamed states' deleteCol reads
+  private def flagged(df: DataFrame, deleted: Boolean): DataFrame =
+    df.withColumn("_deleted", lit(deleted))
+
+  /** Batch `b` of the streamed rows' ERASURE sequence over `df`, split in
+    * thirds by `id` mod 3: batches 0 and 1 are thirds 0 and 1, live; batch
+    * 2 is third 2's rows that are not `doomed`, plus tombstones for the
+    * `doomed` rows of thirds 0 and 1. */
+  private def erasureBatch(df: DataFrame, id: String, doomed: Column)(
+      b: Long): DataFrame =
+    if (b < 2) flagged(df.filter(col(id) % 3 === b), deleted = false)
+    else flagged(df.filter(col(id) % 3 === 2 && !doomed), deleted = false)
+      .unionByName(
+        flagged(df.filter(col(id) % 3 =!= 2 && doomed), deleted = true))
+
+  /** Batch `b` of the streamed rows' erase → RE-INGEST sequence over `df`:
+    * batch 0 is third 0 (by `id` mod 3); batch 1 is third 1 plus
+    * tombstones for the `doomed` rows (all in third 0); batch 2 brings the
+    * `doomed` rows back, live; batch 3 is third 2. */
+  private def reingestBatch(df: DataFrame, id: String, doomed: Column)(
+      b: Long): DataFrame = b match {
+    case 0L => flagged(df.filter(col(id) % 3 === 0), deleted = false)
+    case 1L => flagged(df.filter(col(id) % 3 === 1), deleted = false)
+      .unionByName(flagged(df.filter(doomed), deleted = true))
+    case 2L => flagged(df.filter(doomed), deleted = false)
+    case _ => flagged(df.filter(col(id) % 3 === 2), deleted = false)
+  }
+
   /** Raw synthetic envelopes, materialized once per (session, dir):
     * `localCheckpoint` + cache because every ETL query shares this source —
     * in a real deployment the envelopes are a parquet/Kafka scan, and the
@@ -250,11 +278,7 @@ object Queries {
     // VERBATIM.
     "q_scd2_stream" -> ((s, dir) => {
       val ev = t(s, dir, "events")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/scd2_stream_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_scd2s").toString
-      }
+      val state = sources.Artifacts.stateDir("scd2_stream_state")
       val c1 = lit("2024-01-18").cast("timestamp")
       val c2 = lit("2024-01-25").cast("timestamp")
       val batches = Seq(ev.filter(col("ts") < c1),
@@ -428,11 +452,7 @@ object Queries {
       import org.apache.spark.sql.expressions.Window
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/snap_stream_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_snaps").toString
-      }
+      val state = sources.Artifacts.stateDir("snap_stream_state")
       def latestPerUser(df: org.apache.spark.sql.DataFrame) = df
         .withColumn("_rn", row_number().over(Window.partitionBy(col("user_id"))
           .orderBy(col("ts").desc, col("event_id").desc)))
@@ -1217,11 +1237,7 @@ object Queries {
       val docs = tWide(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 50 =!= 0)
       val benchmark = docs.filter(col("doc_id") % 50 === 0)
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/srelease_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_srel").toString
-      }
+      val state = sources.Artifacts.stateDir("srelease_state")
       streaming.Redrive(s, state, 2L) { b =>
         streaming.StreamingRelease.applyBatch(
           corpus.filter(col("doc_id") % 3 === b), benchmark, state, b)
@@ -1242,11 +1258,7 @@ object Queries {
       val corpus = docs.filter(col("doc_id") % 50 =!= 0)
       val benchmark = docs.filter(col("doc_id") % 50 === 0)
       val dc: org.apache.spark.sql.Column = col("doc_id") % 10 === 6
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/srelease_erasure_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_srele").toString
-      }
+      val state = sources.Artifacts.stateDir("srelease_erasure_state")
       streaming.Redrive(s, state, 2L) {
         case b if b < 2 =>
           streaming.StreamingRelease.applyBatch(
@@ -1397,11 +1409,7 @@ object Queries {
     // oracle VERBATIM.
     "q_dedup_stream" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sdedup_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sdedup").toString
-      }
+      val state = sources.Artifacts.stateDir("sdedup_state")
       streaming.Redrive(s, state, 2L) { b =>
         streaming.StreamingDedup.applyBatch(
           docs.filter(col("doc_id") % 3 === b), state, b, maxSegments = 3)
@@ -1416,25 +1424,11 @@ object Queries {
     // out by anti join. Labels ≡ a full recompute over the survivors.
     "q_dedup_stream_erasure" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sdedup_erasure_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sdedupe").toString
-      }
-      val dc: org.apache.spark.sql.Column = col("doc_id") % 10 === 6
-      streaming.Redrive(s, state, 2L) {
-        case b if b < 2 =>
-          streaming.StreamingDedup.applyBatch(
-            docs.filter(col("doc_id") % 3 === b)
-              .withColumn("_deleted", lit(false)),
-            state, b, deleteCol = Some("_deleted"), maxSegments = 3)
-        case b =>
-          streaming.StreamingDedup.applyBatch(
-            docs.filter(col("doc_id") % 3 === 2 && !dc)
-              .withColumn("_deleted", lit(false))
-              .unionByName(docs.filter(col("doc_id") % 3 =!= 2 && dc)
-                .withColumn("_deleted", lit(true))),
-            state, b, deleteCol = Some("_deleted"), maxSegments = 3)
+      val state = sources.Artifacts.stateDir("sdedup_erasure_state")
+      val batch = erasureBatch(docs, "doc_id", col("doc_id") % 10 === 6) _
+      streaming.Redrive(s, state, 2L) { b =>
+        streaming.StreamingDedup.applyBatch(batch(b), state, b,
+          deleteCol = Some("_deleted"), maxSegments = 3)
       }
       streaming.StreamingDedup.vacuum(s, state)
       streaming.StreamingDedup.readLabels(s, state).orderBy(col("doc_id"))
@@ -1449,25 +1443,11 @@ object Queries {
     // q_dedup_clusters' oracle VERBATIM, no survivors filter.
     "q_dedup_stream_reingest" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sdedup_reingest_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sdedupr").toString
-      }
-      val dc: org.apache.spark.sql.Column =
-        col("doc_id") % 3 === 0 && col("doc_id") % 10 === 6
-      def batchOf(b: Long): org.apache.spark.sql.DataFrame = b match {
-        case 0L => docs.filter(col("doc_id") % 3 === 0)
-          .withColumn("_deleted", lit(false))
-        case 1L => docs.filter(col("doc_id") % 3 === 1)
-          .withColumn("_deleted", lit(false))
-          .unionByName(docs.filter(dc).withColumn("_deleted", lit(true)))
-        case 2L => docs.filter(dc).withColumn("_deleted", lit(false))
-        case _ => docs.filter(col("doc_id") % 3 === 2)
-          .withColumn("_deleted", lit(false))
-      }
+      val state = sources.Artifacts.stateDir("sdedup_reingest_state")
+      val batch = reingestBatch(docs, "doc_id",
+        col("doc_id") % 3 === 0 && col("doc_id") % 10 === 6) _
       streaming.Redrive(s, state, 3L) { b =>
-        streaming.StreamingDedup.applyBatch(batchOf(b), state, b,
+        streaming.StreamingDedup.applyBatch(batch(b), state, b,
           deleteCol = Some("_deleted"), maxSegments = 5)
       }
       streaming.StreamingDedup.vacuum(s, state)
@@ -1707,11 +1687,7 @@ object Queries {
     // VERBATIM.
     "q_centroids_stream" -> ((s, dir) => {
       val emb = tWide(s, dir, "embeddings")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/scent_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_scent").toString
-      }
+      val state = sources.Artifacts.stateDir("scent_state")
       streaming.Redrive(s, state, 2L) { b =>
         streaming.StreamingCentroids.applyBatch(
           emb.filter(col("vec_id") % 3 === b), state, b, maxSegments = 3)
@@ -1728,25 +1704,11 @@ object Queries {
     // survivors (q_centroids_delete's oracle).
     "q_centroids_stream_erasure" -> ((s, dir) => {
       val emb = tWide(s, dir, "embeddings")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/scent_erasure_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_scente").toString
-      }
-      val dc: org.apache.spark.sql.Column = col("vec_id") % 10 === 4
-      streaming.Redrive(s, state, 2L) {
-        case b if b < 2 =>
-          streaming.StreamingCentroids.applyBatch(
-            emb.filter(col("vec_id") % 3 === b)
-              .withColumn("_deleted", lit(false)),
-            state, b, deleteCol = Some("_deleted"), maxSegments = 3)
-        case b =>
-          streaming.StreamingCentroids.applyBatch(
-            emb.filter(col("vec_id") % 3 === 2 && !dc)
-              .withColumn("_deleted", lit(false))
-              .unionByName(emb.filter(col("vec_id") % 3 =!= 2 && dc)
-                .withColumn("_deleted", lit(true))),
-            state, b, deleteCol = Some("_deleted"), maxSegments = 3)
+      val state = sources.Artifacts.stateDir("scent_erasure_state")
+      val batch = erasureBatch(emb, "vec_id", col("vec_id") % 10 === 4) _
+      streaming.Redrive(s, state, 2L) { b =>
+        streaming.StreamingCentroids.applyBatch(batch(b), state, b,
+          deleteCol = Some("_deleted"), maxSegments = 3)
       }
       streaming.StreamingCentroids.vacuum(s, state)
       streaming.StreamingCentroids.readCentroids(s, state)
@@ -1761,25 +1723,11 @@ object Queries {
     // q_embed_centroids' oracle VERBATIM.
     "q_centroids_stream_reingest" -> ((s, dir) => {
       val emb = tWide(s, dir, "embeddings")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/scent_reingest_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_scentr").toString
-      }
-      val dc: org.apache.spark.sql.Column =
-        col("vec_id") % 3 === 0 && col("vec_id") % 10 === 4
-      def batchOf(b: Long): org.apache.spark.sql.DataFrame = b match {
-        case 0L => emb.filter(col("vec_id") % 3 === 0)
-          .withColumn("_deleted", lit(false))
-        case 1L => emb.filter(col("vec_id") % 3 === 1)
-          .withColumn("_deleted", lit(false))
-          .unionByName(emb.filter(dc).withColumn("_deleted", lit(true)))
-        case 2L => emb.filter(dc).withColumn("_deleted", lit(false))
-        case _ => emb.filter(col("vec_id") % 3 === 2)
-          .withColumn("_deleted", lit(false))
-      }
+      val state = sources.Artifacts.stateDir("scent_reingest_state")
+      val batch = reingestBatch(emb, "vec_id",
+        col("vec_id") % 3 === 0 && col("vec_id") % 10 === 4) _
       streaming.Redrive(s, state, 3L) { b =>
-        streaming.StreamingCentroids.applyBatch(batchOf(b), state, b,
+        streaming.StreamingCentroids.applyBatch(batch(b), state, b,
           deleteCol = Some("_deleted"), maxSegments = 5)
       }
       streaming.StreamingCentroids.vacuum(s, state)
@@ -2016,11 +1964,7 @@ object Queries {
       val emb = tWide(s, dir, "embeddings")
       val centers = sources.Artifacts.table(s, "ivf_centers")(
         llm.Similarity.ivfCenters(emb, nCells = 4))
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sivf_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sivf").toString
-      }
+      val state = sources.Artifacts.stateDir("sivf_state")
       streaming.Redrive(s, state, 2L) { b =>
         streaming.StreamingIvf.applyBatch(
           emb.filter(col("vec_id") % 3 === b), state, b, centers,
@@ -2039,25 +1983,11 @@ object Queries {
       val emb = tWide(s, dir, "embeddings")
       val centers = sources.Artifacts.table(s, "ivf_centers")(
         llm.Similarity.ivfCenters(emb, nCells = 4))
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sivf_erasure_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sivfe").toString
-      }
-      val dc: org.apache.spark.sql.Column = col("vec_id") % 10 === 4
-      streaming.Redrive(s, state, 2L) {
-        case b if b < 2 =>
-          streaming.StreamingIvf.applyBatch(
-            emb.filter(col("vec_id") % 3 === b)
-              .withColumn("_deleted", lit(false)),
-            state, b, centers, deleteCol = Some("_deleted"), maxSegments = 5)
-        case b =>
-          streaming.StreamingIvf.applyBatch(
-            emb.filter(col("vec_id") % 3 === 2 && !dc)
-              .withColumn("_deleted", lit(false))
-              .unionByName(emb.filter(col("vec_id") % 3 =!= 2 && dc)
-                .withColumn("_deleted", lit(true))),
-            state, b, centers, deleteCol = Some("_deleted"), maxSegments = 5)
+      val state = sources.Artifacts.stateDir("sivf_erasure_state")
+      val batch = erasureBatch(emb, "vec_id", col("vec_id") % 10 === 4) _
+      streaming.Redrive(s, state, 2L) { b =>
+        streaming.StreamingIvf.applyBatch(batch(b), state, b, centers,
+          deleteCol = Some("_deleted"), maxSegments = 5)
       }
       streaming.StreamingIvf.vacuum(s, state)
       streaming.StreamingIvf.knn(s, state, col("vec_id") < 10, k = 5,
@@ -2197,11 +2127,7 @@ object Queries {
     // state vs brute force over the live vec view.
     "q_knn_graph_stream" -> ((s, dir) => {
       val emb = tWide(s, dir, "embeddings")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sgann_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sgann").toString
-      }
+      val state = sources.Artifacts.stateDir("sgann_state")
       streaming.Redrive(s, state, 2L) { b =>
         streaming.StreamingGraphAnn.applyBatch(
           emb.filter(col("vec_id") % 3 === b), state, b,
@@ -2219,11 +2145,7 @@ object Queries {
     "q_knn_graph_stream_erasure" -> ((s, dir) => {
       val emb = tWide(s, dir, "embeddings")
       val dc: org.apache.spark.sql.Column = col("vec_id") % 10 === 6
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sgann_state_erasure"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sganne").toString
-      }
+      val state = sources.Artifacts.stateDir("sgann_state_erasure")
       streaming.Redrive(s, state, 2L) {
         case b if b < 2 =>
           streaming.StreamingGraphAnn.applyBatch(
@@ -2742,11 +2664,7 @@ object Queries {
     // the 15% rank contract against the survivor truth.
     "q_quantile_stream" -> ((s, dir) => {
       val ev = t(s, dir, "events")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/squant_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_squant").toString
-      }
+      val state = sources.Artifacts.stateDir("squant_state")
       def apply(b: org.apache.spark.sql.DataFrame, id: Long,
           del: Option[String] = None): Unit =
         streaming.StreamingQuantile.applyBatch(b, state, id,
@@ -2978,11 +2896,7 @@ object Queries {
     // probe. Shares q_index_phrase_exact's truth oracle VERBATIM.
     "q_index_phrase_exact_stream" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sposx_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sposx").toString
-      }
+      val state = sources.Artifacts.stateDir("sposx_state")
       streaming.Redrive(s, state, 2L) { b =>
         streaming.StreamingIndex.applyBatch(
           docs.filter(col("doc_id") % 3 === b), state, b, maxSegments = 3,
@@ -3008,11 +2922,7 @@ object Queries {
     // q_index_phrase's, so it shares that oracle VERBATIM.
     "q_index_phrase_stream" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sidx_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sidxp").toString
-      }
+      val state = sources.Artifacts.stateDir("sidx_state")
       streaming.Redrive(s, state, 2L) { b =>
         streaming.StreamingIndex.applyBatch(
           docs.filter(col("doc_id") % 3 === b), state, b, maxSegments = 3)
@@ -3085,16 +2995,9 @@ object Queries {
     // rebuild over the whole corpus.
     "q_index_stream" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      // bench mode: the state dir lives under the artifact root, so the
-      // batches fold once (pass 1) and later passes hit the replay-skip
-      // pointer — the MIN measures the railed serving read over the
-      // compacted base, the q_bm25_indexed discipline. Verify gets a
-      // fresh temp dir and folds everything inline every run.
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sidx_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sidx").toString
-      }
+      // bench mode folds once (pass 1) and later passes serve — the MIN
+      // measures the railed serving read over the compacted base
+      val state = sources.Artifacts.stateDir("sidx_state")
       // Redrive: a run that died mid-prefix resumes exactly where it
       // stopped (never silently serving a partial index), and a completed
       // fold serves without re-driving — a pass ≥ 2 measures the railed
@@ -3116,30 +3019,16 @@ object Queries {
     // the streamed fold ≡ a rebuild over the survivors.
     "q_index_stream_erasure" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sidx_erasure_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sidxe").toString
-      }
-      val dc: org.apache.spark.sql.Column = col("doc_id") % 10 === 6
+      val state = sources.Artifacts.stateDir("sidx_erasure_state")
       // Redrive folds the un-applied suffix (resume safety);
       // the tail batch carries the last third's clean docs WITH erasure
       // tombstones for every already-ingested doc_id ≡ 6 (mod 10), and
       // triggers compaction (maxSegments=3) — the tombstones fold into
       // the bucket-partitioned base, then vacuum reclaims the segments
-      streaming.Redrive(s, state, 2L) {
-        case b if b < 2 =>
-          streaming.StreamingIndex.applyBatch(
-            docs.filter(col("doc_id") % 3 === b)
-              .withColumn("_deleted", lit(false)),
-            state, b, deleteCol = Some("_deleted"), maxSegments = 3)
-        case b =>
-          streaming.StreamingIndex.applyBatch(
-            docs.filter(col("doc_id") % 3 === 2 && !dc)
-              .withColumn("_deleted", lit(false))
-              .unionByName(docs.filter(col("doc_id") % 3 =!= 2 && dc)
-                .withColumn("_deleted", lit(true))),
-            state, b, deleteCol = Some("_deleted"), maxSegments = 3)
+      val batch = erasureBatch(docs, "doc_id", col("doc_id") % 10 === 6) _
+      streaming.Redrive(s, state, 2L) { b =>
+        streaming.StreamingIndex.applyBatch(batch(b), state, b,
+          deleteCol = Some("_deleted"), maxSegments = 3)
       }
       streaming.StreamingIndex.vacuum(s, state)
       // rails over the LIVE stats sidecar (n_docs already nets out the
@@ -3158,11 +3047,7 @@ object Queries {
     // driver gate covers the minor path, not just the specs.
     "q_index_stream_minor" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sidx_minor_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sidxm").toString
-      }
+      val state = sources.Artifacts.stateDir("sidx_minor_state")
       streaming.Redrive(s, state, 4L) { b =>
         streaming.StreamingIndex.applyBatch(
           docs.filter(col("doc_id") % 5 === b), state, b,
@@ -3183,25 +3068,11 @@ object Queries {
     // q_index_stream's railed oracle VERBATIM.
     "q_index_stream_reingest" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sidx_reingest_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sidxr").toString
-      }
-      val dc: org.apache.spark.sql.Column =
-        col("doc_id") % 3 === 0 && col("doc_id") % 10 === 6
-      def batchOf(b: Long): org.apache.spark.sql.DataFrame = b match {
-        case 0L => docs.filter(col("doc_id") % 3 === 0)
-          .withColumn("_deleted", lit(false))
-        case 1L => docs.filter(col("doc_id") % 3 === 1)
-          .withColumn("_deleted", lit(false))
-          .unionByName(docs.filter(dc).withColumn("_deleted", lit(true)))
-        case 2L => docs.filter(dc).withColumn("_deleted", lit(false))
-        case _ => docs.filter(col("doc_id") % 3 === 2)
-          .withColumn("_deleted", lit(false))
-      }
+      val state = sources.Artifacts.stateDir("sidx_reingest_state")
+      val batch = reingestBatch(docs, "doc_id",
+        col("doc_id") % 3 === 0 && col("doc_id") % 10 === 6) _
       streaming.Redrive(s, state, 3L) { b =>
-        streaming.StreamingIndex.applyBatch(batchOf(b), state, b,
+        streaming.StreamingIndex.applyBatch(batch(b), state, b,
           deleteCol = Some("_deleted"), maxSegments = 5)
       }
       streaming.StreamingIndex.vacuum(s, state)
@@ -3273,21 +3144,13 @@ object Queries {
     "q_snippets_stream" -> ((s, dir) => {
       import s.implicits._
       val docs = tWide(s, dir, "documents")
-      val bmState = sources.Artifacts.root match {
-        case Some(r) => s"$r/sbm25_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sbm25sn").toString
-      }
+      val bmState = sources.Artifacts.stateDir("sbm25_state")
       streaming.Redrive(s, bmState, 2L) { b =>
         streaming.StreamingSearchIndex.applyBatch(
           docs.filter(col("doc_id") % 3 === b), bmState, b, maxSegments = 3)
       }
       streaming.StreamingSearchIndex.vacuum(s, bmState)
-      val posState = sources.Artifacts.root match {
-        case Some(r) => s"$r/sposx_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sposxsn").toString
-      }
+      val posState = sources.Artifacts.stateDir("sposx_state")
       streaming.Redrive(s, posState, 2L) { b =>
         streaming.StreamingIndex.applyBatch(
           docs.filter(col("doc_id") % 3 === b), posState, b, maxSegments = 3,
@@ -3330,11 +3193,7 @@ object Queries {
     // q_ql_indexed's oracle verbatim)
     "q_ql_stream" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sbm25_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sbm25q").toString
-      }
+      val state = sources.Artifacts.stateDir("sbm25_state")
       streaming.Redrive(s, state, 2L) { b =>
         streaming.StreamingSearchIndex.applyBatch(
           docs.filter(col("doc_id") % 3 === b), state, b, maxSegments = 3)
@@ -3352,11 +3211,7 @@ object Queries {
     // shares q_bm25's oracle VERBATIM.
     "q_bm25_stream" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sbm25_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sbm25").toString
-      }
+      val state = sources.Artifacts.stateDir("sbm25_state")
       streaming.Redrive(s, state, 2L) { b =>
         streaming.StreamingSearchIndex.applyBatch(
           docs.filter(col("doc_id") % 3 === b), state, b, maxSegments = 3)
@@ -3372,25 +3227,11 @@ object Queries {
     // (oracle = inline BM25 over corpus ∖ deleted).
     "q_bm25_stream_erasure" -> ((s, dir) => {
       val docs = tWide(s, dir, "documents")
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/sbm25_erasure_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_sbm25e").toString
-      }
-      val dc: org.apache.spark.sql.Column = col("doc_id") % 10 === 6
-      streaming.Redrive(s, state, 2L) {
-        case b if b < 2 =>
-          streaming.StreamingSearchIndex.applyBatch(
-            docs.filter(col("doc_id") % 3 === b)
-              .withColumn("_deleted", lit(false)),
-            state, b, deleteCol = Some("_deleted"), maxSegments = 3)
-        case b =>
-          streaming.StreamingSearchIndex.applyBatch(
-            docs.filter(col("doc_id") % 3 === 2 && !dc)
-              .withColumn("_deleted", lit(false))
-              .unionByName(docs.filter(col("doc_id") % 3 =!= 2 && dc)
-                .withColumn("_deleted", lit(true))),
-            state, b, deleteCol = Some("_deleted"), maxSegments = 3)
+      val state = sources.Artifacts.stateDir("sbm25_erasure_state")
+      val batch = erasureBatch(docs, "doc_id", col("doc_id") % 10 === 6) _
+      streaming.Redrive(s, state, 2L) { b =>
+        streaming.StreamingSearchIndex.applyBatch(batch(b), state, b,
+          deleteCol = Some("_deleted"), maxSegments = 3)
       }
       streaming.StreamingSearchIndex.vacuum(s, state)
       streaming.StreamingSearchIndex.bm25(s, state, llm.Search.DefaultPanel)
@@ -3684,11 +3525,7 @@ object Queries {
         (col("n_chars") * 2).cast("int").as("width"),
         lit(1).as("height"))
       val media = llm.Multimodal.mediaFromDocuments(docs).unionByName(reenc)
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/smedia_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_smedia").toString
-      }
+      val state = sources.Artifacts.stateDir("smedia_state")
       streaming.Redrive(s, state, 2L) { b =>
         streaming.StreamingMedia.applyBatch(
           media.filter(col("media_id") % 3 === b), state, b, maxSegments = 3)
@@ -3711,11 +3548,7 @@ object Queries {
         lit(1).as("height"))
       val media = llm.Multimodal.mediaFromDocuments(docs).unionByName(reenc)
       val doomed = col("media_id") % 10 === 6 && col("media_id") < 1000000L
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/smedia_erasure_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_smediae").toString
-      }
+      val state = sources.Artifacts.stateDir("smedia_erasure_state")
       streaming.Redrive(s, state, 2L) {
         case b if b < 2 =>
           streaming.StreamingMedia.applyBatch(
@@ -3779,11 +3612,7 @@ object Queries {
       val docs = t(s, dir, "documents")
       val media = llm.Multimodal.mediaFromDocuments(docs)
         .unionByName(clipBatch(docs))
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/schunk_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_schunk").toString
-      }
+      val state = sources.Artifacts.stateDir("schunk_state")
       streaming.Redrive(s, state, 2L) { b =>
         streaming.StreamingChunks.applyBatch(
           media.filter(col("media_id") % 3 === b), state, b, maxSegments = 3)
@@ -3801,11 +3630,7 @@ object Queries {
       val media = llm.Multimodal.mediaFromDocuments(docs)
         .unionByName(clipBatch(docs))
       val doomed = col("media_id") % 10 === 7 && col("media_id") < 3000000L
-      val state = sources.Artifacts.root match {
-        case Some(r) => s"$r/schunk_erasure_state"
-        case None =>
-          java.nio.file.Files.createTempDirectory("graft_schunke").toString
-      }
+      val state = sources.Artifacts.stateDir("schunk_erasure_state")
       streaming.Redrive(s, state, 2L) {
         case b if b < 2 =>
           streaming.StreamingChunks.applyBatch(

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -131,14 +131,20 @@ object EventEtl {
     * `valid` here too). The output arity is derived, not measured:
     * valid messages emit 1 + has_identify records ([[flatten]]). */
   def pipelineMetrics(parsedDf: DataFrame): DataFrame =
-    parsedDf.agg(
-      count(lit(1)).as("input_count"),
+    parsedDf.agg(ParseCounters.head,
       sum(when(col("valid"),
           when(col("has_identify"), 2L).otherwise(1L)).otherwise(0L))
-        .as("output_count"),
-      sum(when(!col("valid"), 1L).otherwise(0L)).as("invalid_count"),
-      sum(when(col("valid") && col("session_repaired"), 1L).otherwise(0L))
-        .as("repaired_count"),
-      min(col("publish_time")).as("min_publish_time"),
-      max(col("publish_time")).as("max_publish_time"))
+        .as("output_count") +: ParseCounters.tail: _*)
+
+  /** The per-batch parse counters over [[parsed]] rows — input, invalid
+    * and repaired counts and the min/max publish time — shared by
+    * [[pipelineMetrics]] and the daemon's `observe("parse", …)`
+    * ([[graft.streaming.StreamingPipeline.transform]]). */
+  val ParseCounters: Seq[Column] = Seq(
+    count(lit(1)).as("input_count"),
+    sum(when(!col("valid"), 1L).otherwise(0L)).as("invalid_count"),
+    sum(when(col("valid") && col("session_repaired"), 1L).otherwise(0L))
+      .as("repaired_count"),
+    min(col("publish_time")).as("min_publish_time"),
+    max(col("publish_time")).as("max_publish_time"))
 }

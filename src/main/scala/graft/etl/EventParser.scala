@@ -5,7 +5,6 @@ import java.util.Base64
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import graft.expr.HmacSha256
-import graft.model.AmplitudeEvent
 
 /** Pure per-message parser for the reference's transform chain O2→O9 + the
   * identify split trigger (fxa-amplitude-send `utils.js:37-90`), executed
@@ -35,7 +34,8 @@ object EventParser {
   /** Jackson is thread-safe for reads; Spark ships it (no new dependency). */
   private val mapper = new ObjectMapper()
 
-  private val Verbs = AmplitudeEvent.IdentifyVerbs.toSet
+  /** The five Amplitude identify verbs (reference `utils.js:105`). */
+  private val Verbs = Set("$set", "$setOnce", "$add", "$append", "$unset")
 
   /** Parsed per-message diagnostic record; `rows` arity is derived by
     * [[EventEtl.flatten]] from (valid, has_identify). `sessionRepaired` /

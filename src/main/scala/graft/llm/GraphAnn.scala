@@ -925,9 +925,12 @@ object GraphAnn {
     var canProbe = true
     var r = 1
     while (r <= iters) {
-      // a local beam that outgrew the cap hands back to the distributed
-      // rounds (LocalRelation re-evaluation is free — no checkpoint)
-      if (beamLocal != null && beamLocal.length > LocalWalkCap) {
+      // a local beam that outgrew the cap, or whose frontier outgrew the
+      // literal gate (gate() would hand the round the WHOLE graph to
+      // collect), hands back to the distributed rounds (LocalRelation
+      // re-evaluation is free — no checkpoint)
+      if (beamLocal != null && (beamLocal.length > LocalWalkCap ||
+          beamLocal.iterator.map(_._2).distinct.size > MaxLiteralFrontier)) {
         beamDF = localBeamDF(spark, beamLocal)
         beamLocal = null
       }
@@ -948,21 +951,20 @@ object GraphAnn {
         // (> MaxLiteralFrontier distinct ids — bulk walks sit far above
         // it and only converge further INTO their own beams), the probe
         // buys nothing any more: stop paying its job per round
-        if (canProbe &&
-            taken.iterator.map(_.getLong(0)).toSet.size.toLong * ef
-              > LocalWalkCap &&
-            (taken.length > 16 * MaxLiteralFrontier ||
-              taken.iterator.map(_.getLong(1)).toSet.size
-                > MaxLiteralFrontier))
-          canProbe = false
+        val qidsTimesEf =
+          taken.iterator.map(_.getLong(0)).toSet.size.toLong * ef
+        val wide = taken.length > 16 * MaxLiteralFrontier ||
+          taken.iterator.map(_.getLong(1)).toSet.size > MaxLiteralFrontier
+        if (canProbe && qidsTimesEf > LocalWalkCap && wide) canProbe = false
         // flip only when the beam can NEVER outgrow the cap: a walk's
         // qid set never grows, so |qids|·ef bounds every later round's
         // beam — without this guard a mid-size descent beam flipped
         // local, outgrew the cap after one expansion, and flip-flopped
-        // back (measured +1.3 s on q_knn_graph_layered_incr)
-        if (canProbe && taken.length <= LocalWalkCap &&
-            taken.iterator.map(_.getLong(0)).toSet.size.toLong * ef
-              <= LocalWalkCap) {
+        // back (measured +1.3 s on q_knn_graph_layered_incr). A wide
+        // frontier stays distributed: its local round would collect the
+        // whole graph.
+        if (canProbe && !wide && taken.length <= LocalWalkCap &&
+            qidsTimesEf <= LocalWalkCap) {
           // the take IS the whole topEf'd beam — flip to driver-local
           // rounds, starting with THIS round's expansion below
           beamLocal = taken.map(row =>
@@ -1000,8 +1002,10 @@ object GraphAnn {
           // the identical left-to-right IEEE dot ([[DotProduct]]'s loop,
           // float widened exactly at collection) and the identical ÷.
           // Missing qids can't occur (every beam qid is a walk query — the
-          // old inner join dropped none); dim mismatch/null elements yield
-          // no row, DotProduct's null contract.
+          // old inner join dropped none); a null dst_vec/dst_norm, dim
+          // mismatch or null element yields no row, DotProduct's null
+          // contract. The frontier is ≤ MaxLiteralFrontier ids (wider
+          // ones handed back above), so gate() prunes: ≤ |ids|·m rows.
           val qm = qVecs.map // forced BEFORE the round label (1 collect/walk)
           val ids = beamLocal.map(_._2).distinct.sorted
           val edges = labeled(graph, s"walk r$r/$iters local") {
@@ -1012,9 +1016,12 @@ object GraphAnn {
           val bySrc = new java.util.HashMap[Long,
             scala.collection.mutable.ArrayBuffer[(Long, Array[Double], Double)]]()
           edges.foreach { e =>
-            val buf = bySrc.computeIfAbsent(e.getLong(0),
-              _ => scala.collection.mutable.ArrayBuffer.empty)
-            buf += ((e.getLong(1), QueryVecs.toDoubles(e.get(2)), e.getDouble(3)))
+            if (!e.isNullAt(2) && !e.isNullAt(3)) {
+              val buf = bySrc.computeIfAbsent(e.getLong(0),
+                _ => scala.collection.mutable.ArrayBuffer.empty)
+              buf += ((e.getLong(1), QueryVecs.toDoubles(e.get(2)),
+                e.getDouble(3)))
+            }
           }
           val fresh = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
           beamLocal.foreach { case (qid, src, _) =>

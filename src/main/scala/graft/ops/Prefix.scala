@@ -48,16 +48,20 @@ object Prefix {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
   /** Unpersist every intra frame [[globalOrder]] has checkpointed since
-    * the last release. The CALLER owns the timing: a released frame has
-    * no lineage to recompute from, so call this only once every action on
-    * every frame derived from earlier [[Ordered]]s has completed —
-    * [[graft.Bench]] and [[graft.Verify]] drain between catalog rows. */
+    * the last release, and delete the verify-mode state dirs handed out
+    * since then ([[graft.sources.Artifacts.releaseState]]). The CALLER
+    * owns the timing: a released frame has no lineage to recompute from,
+    * so call this only once every action on every frame derived from
+    * earlier [[Ordered]]s has completed — [[graft.Bench]],
+    * [[graft.Verify]] and [[graft.tools.Profile]] release after each
+    * catalog row. */
   def releaseAll(): Unit = {
     var df = live.poll()
     while (df != null) {
       df.unpersist(blocking = false)
       df = live.poll()
     }
+    graft.sources.Artifacts.releaseState()
   }
 
   /** `order` must be a TOTAL order (add a tie-break column if the leading

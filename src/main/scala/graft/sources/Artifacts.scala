@@ -31,7 +31,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    file can never mask a builder regression.
   *
   * Parquet round-trips long/double/string/array columns bit-exactly, so
-  * the two modes are value-identical by construction. */
+  * the two modes are value-identical by construction.
+  *
+  * [[stateDir]] applies the same split to a streamed row's maintained
+  * state: bench mode keeps it under the root (pass 1 folds, later passes
+  * serve), verify/library mode folds into a fresh temp dir that the
+  * row's release deletes. */
 object Artifacts {
 
   def root: Option[String] = sys.props.get("graft.artifact.dir")
@@ -64,6 +69,50 @@ object Artifacts {
         spark.read.parquet(path)
     }
 
+  // Verify-mode state dirs handed out since the last release.
+  private val liveState = new java.util.concurrent.ConcurrentLinkedQueue[File]()
+  // A row built without a release (a spec that only collects it) still
+  // leaves no state behind once the JVM exits.
+  private lazy val exitHook: Unit = sys.addShutdownHook(releaseState()): Unit
+
+  /** The directory a streamed catalog row folds its state `name` into —
+    * the one place that picks it.
+    *
+    *  - '''bench mode''': `<root>/<name>`. It outlives the row: pass 1
+    *    folds, later passes find the pointer at the final batch and serve
+    *    ([[graft.streaming.Redrive]]); rows naming the same state share
+    *    one fold. [[wipe]] deletes it with the rest of the root.
+    *  - '''verify / library mode''': a fresh `graft_<name>*` temp dir per
+    *    call, so every build folds from scratch. [[releaseState]] deletes
+    *    it — the per-row release [[graft.ops.Prefix.releaseAll]] runs
+    *    that after the row's action — or JVM exit does, if no release
+    *    comes. */
+  def stateDir(name: String): String = root match {
+    case Some(r) => s"$r/$name"
+    case None =>
+      exitHook
+      val d = java.nio.file.Files.createTempDirectory(s"graft_$name").toFile
+      liveState.add(d)
+      d.getPath
+  }
+
+  /** Deletes every verify-mode [[stateDir]] handed out since the last
+    * release. Same timing rule as [[graft.ops.Prefix.releaseAll]]: call
+    * it only once every action over the rows that folded into them has
+    * ended. */
+  def releaseState(): Unit = {
+    var d = liveState.poll()
+    while (d != null) {
+      rm(d)
+      d = liveState.poll()
+    }
+  }
+
+  private def rm(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+    f.delete(): Unit
+  }
+
   /** Recursive delete of the artifact root — bench startup hygiene.
     * Refuses roots that don't name an artifact directory: this is a
     * recursive delete driven by a configurable property, so a typo'd
@@ -72,10 +121,6 @@ object Artifacts {
     require(new File(r).getAbsolutePath.contains("artifact"),
       s"refusing to recursively delete '$r': artifact roots must contain " +
         "'artifact' in their path")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
     rm(new File(r))
   }
 }

@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Deterministic-re-drive wrapper for batch-parity drivers — catalog rows
   * and tests that replay a FIXED micro-batch sequence `0..finalId` on
-  * every invocation over a possibly-persisted state dir (bench mode keeps
-  * state dirs under the artifact root across passes; verify mode hands
-  * each invocation a fresh temp dir).
+  * every invocation over the state dir [[graft.sources.Artifacts.stateDir]]
+  * picks. Bench mode keeps it under the artifact root across passes (so
+  * pass 1 folds and later passes serve) until the next bench start wipes
+  * the root; verify/library mode hands each build a fresh temp dir, which
+  * the row's release (or JVM exit) deletes.
   *
   * Semantics by pointer position:
   *  - '''no pointer''' (fresh dir): drive every batch, `0..finalId`.

@@ -98,13 +98,8 @@ object StreamingPipeline {
   def transform(raw: DataFrame, hmacKey: String,
       watermarkDelay: String = "1 hour"): DataFrame = {
     val deduped = EventEtl.parsed(raw, hmacKey)
-      .observe("parse",
-        count(lit(1)).as("input_count"),
-        sum(when(!col("valid"), 1L).otherwise(0L)).as("invalid_count"),
-        sum(when(col("valid") && col("session_repaired"), 1L).otherwise(0L))
-          .as("repaired_count"),
-        min(col("publish_time")).as("min_publish_time"),
-        max(col("publish_time")).as("max_publish_time"))
+      .observe("parse", EventEtl.ParseCounters.head,
+        EventEtl.ParseCounters.tail: _*)
       .filter(col("valid"))
       .withColumn("publish_ts", to_timestamp(col("publish_time")))
       .withWatermark("publish_ts", watermarkDelay)

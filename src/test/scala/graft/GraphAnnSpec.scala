@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.llm.{GraphAnn, Similarity}
 
@@ -272,6 +275,58 @@ class GraphAnnSpec extends SparkTestBase {
     assert(local._1 === dist._1, "search: local beam must equal distributed")
     assert(local._2 === dist._2, "layered: local beam must equal distributed")
     assert(local._3 === dist._3, "insert: local beam must equal distributed")
+  }
+
+  test("a local round whose frontier outgrows the literal gate hands back: never collects more than MaxLiteralFrontier·m edge rows") {
+    // 2560 nodes on a circle, out-edges to the ±1/3/9/27 ring neighbors;
+    // 64 queries 40 nodes apart at ef=64: |qids|·ef = 4096 fits the local
+    // cap, and their converging beams together cover more than
+    // MaxLiteralFrontier distinct nodes
+    val n = 2560
+    val m = 8
+    def vec(i: Int) = {
+      val a = 2 * math.Pi * i / n
+      Seq(math.cos(a), math.sin(a))
+    }
+    val emb = (0 until n).map(i => (i.toLong, vec(i)))
+      .toDF("vec_id", "embedding").localCheckpoint()
+    val hops = Seq(1, 3, 9, 27).flatMap(h => Seq(h, -h))
+    val graph = (for (i <- 0 until n; h <- hops) yield {
+        val j = Math.floorMod(i + h, n)
+        val v = vec(j)
+        (i.toLong, j.toLong, v, math.sqrt(v.map(x => x * x).sum))
+      }).toDF("src", "dst", "dst_vec", "dst_norm")
+      .withColumn("b", GraphAnn.srcBucket($"src"))
+      .localCheckpoint()
+    // a local round's one job collects the gated edge projection
+    val rounds = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "collect" && qe.analyzed.output.map(_.name) ==
+            Seq("src", "dst", "dst_vec", "dst_norm")) rounds.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def walk() = GraphAnn.search(emb, graph, $"vec_id" % 40 === 0, k = 5,
+      ef = 64, iters = 6, entries = 64).collect().toSeq
+    spark.listenerManager.register(listener)
+    val local =
+      try walk()
+      finally {
+        GraftBridge.drainListenerBus(spark)
+        spark.listenerManager.unregister(listener)
+      }
+    val saved = GraphAnn.LocalWalkCap
+    val dist =
+      try { GraphAnn.LocalWalkCap = 0; walk() } // force the distributed mode
+      finally GraphAnn.LocalWalkCap = saved
+    assert(local === dist, "the bounded local walk must equal distributed")
+    import scala.jdk.CollectionConverters._
+    val collected = rounds.asScala.toSeq.map(_.executedPlan.execute().count())
+    info(s"edge rows per local round: ${collected.mkString(",")}")
+    assert(collected.nonEmpty, "the walk must run local rounds")
+    assert(collected.max <= GraphAnn.MaxLiteralFrontier.toLong * m,
+      s"a local round collected ${collected.max} edge rows — more than " +
+        s"MaxLiteralFrontier·m = ${GraphAnn.MaxLiteralFrontier * m}")
   }
 
   test("prebuilt serving: each beam round reads only the frontier's buckets' bytes") {

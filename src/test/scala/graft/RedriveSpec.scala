@@ -94,4 +94,67 @@ class RedriveSpec extends SparkTestBase {
     assert(invoke() === first)
     assert(invoke() === first)
   }
+
+  // Artifacts.stateDir over a real catalog row at sf0.001
+  private val sfDir = "/root/testdata/sf0.001"
+  private val row = "q_scd2_stream"
+
+  // the row's verify-mode state dirs in the temp dir
+  private def graftTmpDirs(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .fold(Set.empty[String])(
+        _.filter(_.startsWith("graft_scd2_stream_state")).toSet)
+
+  test("stateDir, verify mode: the row's release deletes its state; every build folds into a fresh dir") {
+    assert(graft.sources.Artifacts.root.isEmpty)
+    def buildAndRelease() = {
+      val before = graftTmpDirs()
+      val df = Queries.all(row)(spark, sfDir) // folds the state
+      val created = graftTmpDirs() -- before
+      val out = df.collect().toSeq
+      graft.ops.Prefix.releaseAll() // the drivers' per-row release
+      (created, out)
+    }
+    val (first, out1) = buildAndRelease()
+    assert(first.size === 1, s"one state dir per build: $first")
+    assert((graftTmpDirs() intersect first).isEmpty,
+      s"state left behind after the release: $first")
+    val (second, out2) = buildAndRelease()
+    assert(second.size === 1 && second != first,
+      s"the second build must fold into a fresh dir: $first, $second")
+    assert((graftTmpDirs() intersect second).isEmpty)
+    assert(out2 === out1)
+  }
+
+  test("stateDir, bench mode: builds share <root>/<name>; the second serves without re-driving") {
+    val root = java.nio.file.Files.createTempDirectory("statedir_artifacts")
+      .toString
+    sys.props("graft.artifact.dir") = root
+    try {
+      val state = graft.sources.Artifacts.stateDir("scd2_stream_state")
+      assert(state === s"$root/scd2_stream_state")
+      def tree(f: java.io.File): Seq[(String, Long)] =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName)
+          .flatMap(tree)
+        else Seq(f.getPath -> f.lastModified())
+      def build() = {
+        val out = Queries.all(row)(spark, sfDir).collect().toSeq
+        graft.ops.Prefix.releaseAll()
+        out
+      }
+      val out1 = build()
+      val v1 = StatePointer.read(spark, state)
+      val files1 = tree(new java.io.File(state))
+      assert(v1 === Some(2L))
+      val out2 = build()
+      assert(graft.sources.Artifacts.stateDir("scd2_stream_state") === state)
+      assert(StatePointer.read(spark, state) === v1)
+      assert(tree(new java.io.File(state)) === files1,
+        "a completed fold must serve without touching its state")
+      assert(out2 === out1)
+    } finally {
+      graft.sources.Artifacts.wipe()
+      sys.props.remove("graft.artifact.dir")
+    }
+  }
 }
