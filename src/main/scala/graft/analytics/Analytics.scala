@@ -425,20 +425,6 @@ object Analytics {
       .orderBy(col("hour"))
   }
 
-  /** Daily event-type matrix via pivot. The value list is EXPLICIT: with it
-    * Spark pivots in a single pass; without it a collect-distinct job runs
-    * first to discover the columns — an extra full scan at 100 TB and a
-    * driver-sized-output hazard on high-cardinality pivot keys. Missing
-    * (day, type) cells are 0, not null, matching the filtered-count SQL
-    * spelling. */
-  def dailyEventPivot(events: DataFrame, eventTypes: Seq[String]): DataFrame =
-    events
-      .groupBy(to_date(col("ts")).as("day"))
-      .pivot("event_type", eventTypes)
-      .count()
-      .na.fill(0L, eventTypes)
-      .orderBy(col("day"))
-
   /** Global distinct-user estimate, exact + HLL side by side. */
   def uniques(events: DataFrame): DataFrame =
     events.agg(

@@ -36,7 +36,7 @@ import graft.expr.DotProduct
   * Scale shape at 100 TB: the build shuffles bucket-bounded candidate
   * pairs and edge lists (rows ∝ N·m, never N²); the walk's per-round
   * state is |Q|·ef rows, the frontier's ids are a BOUNDED driver list
-  * (the [[Similarity]] capQueryPred convention), and a persisted graph
+  * (the [[Similarity.capQueries]] convention), and a persisted graph
   * partitioned by source bucket serves each round through static
   * partition pruning + a pushed src-IN filter — reads ∝ frontier·m,
   * zero corpus access (the q_index_phrase probe discipline; the
@@ -178,10 +178,8 @@ object GraphAnn {
   private def searchUnordered(emb: DataFrame, graph: DataFrame,
       queryPred: Column, k: Int, ef: Int, iters: Int, entries: Int,
       nBuckets: Int, idCol: String, vecCol: String): DataFrame = {
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        norm(col(vecCol)).as("qnorm"))
-    walk(queries, emb, graph, k, ef, iters, entries, nBuckets, idCol, vecCol)
+    walk(Similarity.queryPanel(emb, queryPred, idCol, vecCol), emb, graph,
+        k, ef, iters, entries, nBuckets, idCol, vecCol)
       .select(col("qid"), col("rank"), col("id").as("neighbor_id"),
         col("score"))
   }
@@ -378,9 +376,7 @@ object GraphAnn {
       efUpper: Int, itersUpper: Int, entries: Int, nBuckets: Int,
       idCol: String, vecCol: String): DataFrame = {
     require(k >= 1 && ef >= k, s"need ef >= k >= 1: ef=$ef k=$k")
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        norm(col(vecCol)).as("qnorm"))
+    val queries = Similarity.queryPanel(emb, queryPred, idCol, vecCol)
       .localCheckpoint(eager = false) // re-joined every round, every layer
     // no dedup: walkBeam's top-ef aggregation dedups identical
     // (qid, id) rows (equal pairs carry bit-equal scores)
@@ -439,9 +435,7 @@ object GraphAnn {
       entries: Int, nBuckets: Int,
       idCol: String, vecCol: String): DataFrame = {
     require(k >= 1 && ef >= k, s"need ef >= k >= 1: ef=$ef k=$k")
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        norm(col(vecCol)).as("qnorm"))
+    val queries = Similarity.queryPanel(emb, queryPred, idCol, vecCol)
       .localCheckpoint(eager = false)
     val entry = emb
       .select(col(idCol).as("id"), col(vecCol).as("vec"),
@@ -520,8 +514,7 @@ object GraphAnn {
 
   private def batchQueries(batch: DataFrame, idCol: String,
       vecCol: String): DataFrame =
-    batch.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
-        norm(col(vecCol)).as("qnorm"))
+    Similarity.queryPanel(batch, lit(true), idCol, vecCol)
       .localCheckpoint(eager = false) // the walk + both edge directions
 
   /** Digest-ranked nodes OF a graph, vectors off its edge rows —
@@ -710,8 +703,7 @@ object GraphAnn {
   private def scoreCand(queries: DataFrame, cand: DataFrame): DataFrame =
     cand.join(broadcast(queries), Seq("qid"))
       .select(col("qid"), col("id"),
-        (dot(col("qvec"), col("vec")) / (col("qnorm") * col("nrm")))
-          .as("score"))
+        Similarity.qcosine(col("vec"), col("nrm")).as("score"))
 
   private def wq = Window.partitionBy(col("qid"))
     .orderBy(col("score").desc, col("id"))
@@ -724,8 +716,7 @@ object GraphAnn {
   private def initBeam(queries: DataFrame, entry: DataFrame): DataFrame =
     queries.crossJoin(entry)
       .select(col("qid"), col("id"),
-        (dot(col("qvec"), col("vec")) / (col("qnorm") * col("nrm")))
-          .as("score"))
+        Similarity.qcosine(col("vec"), col("nrm")).as("score"))
 
   /** Per-query top-k of a beam, self excluded: (qid, rank, id, score). */
   private def rankBeam(beam: DataFrame, k: Int): DataFrame =
@@ -1091,17 +1082,15 @@ object GraphAnn {
         vecCol),
       recallBound)
 
-  private def recallPanel(approx0: DataFrame, exact0: DataFrame,
-      recallBound: Double): DataFrame = labeled(approx0, "recall panel") {
-    val approx = approx0.select(col("qid"), col("neighbor_id"))
-      .localCheckpoint(eager = false) // hits join + the panel count
-    val exact = exact0.select(col("qid"), col("neighbor_id"))
-      .localCheckpoint(eager = false)
-    val hits = approx.join(exact, Seq("qid", "neighbor_id"), "left_semi")
-    exact.agg(count(lit(1)).as("n_exact"), countDistinct(col("qid")).as("nq"))
-      .crossJoin(hits.agg(count(lit(1)).as("n_hits")))
-      .select(col("nq").as("n_queries"),
-        (col("n_hits").cast("double") / col("n_exact").cast("double")
-          >= recallBound).as("recall_ok"))
+  /** [[Similarity.recallPanel]] over checkpointed (qid, neighbor_id)
+    * frames: exact feeds the hits join and the panel count. */
+  private def recallPanel(approx: DataFrame, exact: DataFrame,
+      recallBound: Double): DataFrame = labeled(approx, "recall panel") {
+    Similarity.recallPanel(
+      approx.select(col("qid"), col("neighbor_id"))
+        .localCheckpoint(eager = false),
+      exact.select(col("qid"), col("neighbor_id"))
+        .localCheckpoint(eager = false),
+      recallBound)
   }
 }

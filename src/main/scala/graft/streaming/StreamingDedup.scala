@@ -89,10 +89,6 @@ object StreamingDedup {
   def readShingles(spark: SparkSession, dir: String): DataFrame =
     artifactView(spark, dir, manifest(spark, dir), "shingles", Seq("b"))
 
-  /** The maintained near-dup pair list (id_a, id_b). */
-  def readPairs(spark: SparkSession, dir: String): DataFrame =
-    StatePointer.versioned(spark, dir, "pairs", "dedup state")
-
   /** The maintained cluster labels (doc_id, cluster_id) — members only,
     * [[Dedup.clusters]]' contract. */
   def readLabels(spark: SparkSession, dir: String): DataFrame =

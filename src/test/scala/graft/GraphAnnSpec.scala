@@ -55,6 +55,28 @@ class GraphAnnSpec extends SparkTestBase {
     assert(row.getBoolean(1))
   }
 
+  test("capQueries composes into the binary and graph recall panels: the same 3 queries every call") {
+    val emb = clustered().localCheckpoint()
+    val g = GraphAnn.buildGraph(emb, m = 8, lshBits = 4, probes = 2)
+      .localCheckpoint()
+    def capped() = Similarity.capQueries(emb, $"vec_id" < 12, 3)
+    def ids() = emb.filter(capped()).select($"vec_id").as[Long]
+      .collect().sorted.toSeq
+    val panel = ids()
+    assert(panel.length === 3 && panel.forall(_ < 12), panel)
+    assert(ids() === panel, "the cap must pick the same queries every call")
+    def binary() = Similarity.binaryKnnRecallPanel(emb, capped(), k = 5)
+      .head()
+    val b = binary()
+    assert(b.getLong(0) === 3L)
+    assert(binary() === b)
+    def graph() = GraphAnn.knnRecallPanel(emb, g, capped(), k = 5,
+      ef = 24, iters = 3, entries = 8).head()
+    val w = graph()
+    assert(w.getLong(0) === 3L)
+    assert(graph() === w)
+  }
+
   test("labeled walk phases restore the caller's job description") {
     val emb = clustered().localCheckpoint()
     val g = GraphAnn.buildGraph(emb, m = 8, lshBits = 4, probes = 2)

@@ -626,13 +626,15 @@ class LlmSpec extends SparkTestBase {
         m = 4, dim = 4, recallBound = 1.01)
       .as[(Long, Boolean)].collect()
     assert(strict === Array((8L, false)))
-    // maxContractQueries: deterministic digest-sampled panel of 3
-    val capped = Similarity.lshKnnRecall(clustered, $"vec_id" < 8, k = 3,
-        m = 4, dim = 4, recallBound = 0.99, maxContractQueries = 3)
+    // capQueries: deterministic digest-sampled panel of 3
+    val capped = Similarity.lshKnnRecall(clustered,
+        Similarity.capQueries(clustered, $"vec_id" < 8, 3), k = 3,
+        m = 4, dim = 4, recallBound = 0.99)
       .as[(Long, Boolean)].collect()
     assert(capped.length === 3 && capped.forall(_._2), capped.mkString(","))
-    val capped2 = Similarity.lshKnnRecall(clustered, $"vec_id" < 8, k = 3,
-        m = 4, dim = 4, recallBound = 0.99, maxContractQueries = 3)
+    val capped2 = Similarity.lshKnnRecall(clustered,
+        Similarity.capQueries(clustered, $"vec_id" < 8, 3), k = 3,
+        m = 4, dim = 4, recallBound = 0.99)
       .as[(Long, Boolean)].collect()
     assert(capped.map(_._1).toSeq === capped2.map(_._1).toSeq) // reproducible panel
   }
